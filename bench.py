@@ -197,6 +197,23 @@ def bench_skew_pass(spark, ev_path: str, obs_path: str, strategy: str) -> float:
     return dt
 
 
+def comparable(q: str, prev: dict, sf: str) -> bool:
+    """Suppress deltas when the prior record measured a different
+    dataset size, mode or core count — a -7s 'improvement' that is
+    really a definition change is worse than no delta."""
+    if prev.get("cpus") != int(CPUS):
+        return False
+    if q == "image_feature_pipeline":
+        # r01 (cold, 30k images) is excluded by the image-count check;
+        # warm_min2 (r02/r03) and interleaved_min measure the same
+        # warm-min estimator, so their deltas stay comparable
+        return (prev.get("n_bench_images") == N_BENCH_IMAGES
+                and prev.get("bench_mode", "warm_min2") in _WARM_MIN_MODES)
+    if q.startswith("asof_skew"):
+        return prev.get("skew_asof", {}).get("n_events") == N_SKEW_EVENTS
+    return prev.get("sf") == sf
+
+
 def previous_bench() -> tuple[str | None, dict]:
     """Newest BENCH_r{N}.json in the repo root, for per-query deltas."""
     cands = []
@@ -314,24 +331,10 @@ def main() -> None:
     prev_name, prev = previous_bench()
     sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
 
-    def comparable(q: str) -> bool:
-        """Suppress deltas when the prior record measured a different
-        dataset size or mode — a -7s 'improvement' that is really a
-        definition change is worse than no delta (round-2 ADVICE)."""
-        if q == "image_feature_pipeline":
-            # r01 (cold, 30k images) is excluded by the image-count check;
-            # warm_min2 (r02/r03) and interleaved_min measure the same
-            # warm-min estimator, so their deltas stay comparable
-            return (prev.get("n_bench_images") == N_BENCH_IMAGES
-                    and prev.get("bench_mode", "warm_min2") in _WARM_MIN_MODES)
-        if q.startswith("asof_skew"):
-            return prev.get("skew_asof", {}).get("n_events") == N_SKEW_EVENTS
-        return prev.get("sf") == sf
-
     deltas = {
         q: round(times[q] - prev["queries"][q], 3)
         for q in times
-        if q in prev.get("queries", {}) and comparable(q)
+        if q in prev.get("queries", {}) and comparable(q, prev, sf)
     }
     out = {
         "metric": "headline query wall-clock (noop sink) + image feature materialization",

@@ -14,8 +14,21 @@ the rows written, not the table size.  This is the Iceberg model (SURVEY.md
 one module, so swapping in ``df.writeTo(...)`` is local.
 
 Layout:  <root>/<table>/data/v{seq}/<partition_col>=<value>/*.parquet
+         <root>/<table>/data/v{seq}/_schema.json  (schema written there)
          <root>/<table>/_manifest.jsonl  (append-only snapshot log)
          <root>/<table>/_manifest.json   (legacy array-format log prefix)
+
+Commit cost is the Spark write job and nothing else.  The per-partition
+row counts come from the parquet footers of the files just written (local
+metadata reads, no read-back job), and the written schema — the frame's
+schema minus the partition column, all fields nullable, which is what
+footer inference returns — is recorded in the version dir's
+``_schema.json`` before the manifest append.  It lives and dies with its
+dir, so ``expire_snapshots`` keeps it exactly as long as the dir is
+referenced.  Reads merge the recorded schemas of the wanted dirs locally
+and pass the result to the reader, so planning a read launches no
+``mergeSchema`` inference job either.  Dirs committed before the sidecar
+existed have none; a read touching one falls back to inference.
 
 The snapshot log is APPEND-ONLY JSONL — one line per commit, O(rows
 written) commit cost on the metadata side too.  Round 3 rewrote the whole
@@ -24,7 +37,8 @@ JSON array every commit, making manifest maintenance O(P²) in commits
 ``_manifest.json`` as an immutable prefix; new commits only ever append
 lines to the JSONL.  A torn final line (crash mid-append) is ignored on
 read — its version dir was never referenced, and the next commit reuses
-the sequence number and overwrites that dir.
+the sequence number and overwrites that dir (``io/jsonl.py``, shared with
+the pipeline's checkpoint and lineage logs).
 
 Concurrency contract: ONE writer per table (the orchestrator's per-table
 checkpointed pipelines give this naturally).  Concurrent committers
@@ -36,6 +50,7 @@ always safe: they see a prefix of the log, and data dirs are immutable.
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import json
 import os
@@ -43,8 +58,18 @@ import re
 import warnings
 from dataclasses import dataclass, field
 
+import pyarrow.parquet as pq
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import (
+    ArrayType,
+    DataType,
+    MapType,
+    StructField,
+    StructType,
+)
+
+from feature_store_spark.io.jsonl import append_jsonl, read_jsonl
 
 # Spark's ExternalCatalogUtils.escapePathName char set (Spark 4,
 # catalyst/catalog/ExternalCatalogUtils.scala): control chars, DEL, and
@@ -63,6 +88,66 @@ def escape_path_name(value: str) -> str:
     return "".join(
         f"%{ord(c):02X}" if c in _PATH_ESCAPE_CHARS else c for c in value
     )
+
+
+def unescape_path_name(name: str) -> str:
+    """On-disk dir component → partition value (inverse of
+    :func:`escape_path_name`, Spark's ``unescapePathName``)."""
+    return re.sub(
+        r"%([0-9A-Fa-f]{2})", lambda m: chr(int(m.group(1), 16)), name
+    )
+
+
+# per-version-dir sidecar holding the schema of the files written there
+_SCHEMA_FILE = "_schema.json"
+_NULL_PARTITION_DIR = "__HIVE_DEFAULT_PARTITION__"
+
+
+def _as_nullable(dt: DataType) -> DataType:
+    """Every field, element and map value nullable: the schema Spark's
+    parquet writer stores and schema inference reads back."""
+    if isinstance(dt, StructType):
+        return StructType([
+            StructField(f.name, _as_nullable(f.dataType), True, f.metadata)
+            for f in dt.fields
+        ])
+    if isinstance(dt, ArrayType):
+        return ArrayType(_as_nullable(dt.elementType), True)
+    if isinstance(dt, MapType):
+        return MapType(
+            _as_nullable(dt.keyType), _as_nullable(dt.valueType), True
+        )
+    return dt
+
+
+class _NeedsInference(Exception):
+    """Recorded schemas whose merge needs Spark's own rules (a type or
+    name-case conflict): the read falls back to ``mergeSchema``."""
+
+
+def _merge_types(a: DataType, b: DataType) -> DataType:
+    """Spark's ``StructType.merge`` where only structs evolve: ``a``'s
+    fields in order (merged with ``b``'s same-named ones), then ``b``'s
+    new fields.  Any other difference raises :class:`_NeedsInference`."""
+    if isinstance(a, StructType) and isinstance(b, StructType):
+        theirs = {f.name: f for f in b.fields}
+        mine = {f.name for f in a.fields}
+        new = [f for f in b.fields if f.name not in mine]
+        if {f.name.lower() for f in new} & {n.lower() for n in mine}:
+            raise _NeedsInference
+        return StructType([
+            StructField(
+                f.name,
+                _merge_types(f.dataType, theirs[f.name].dataType)
+                if f.name in theirs else f.dataType,
+                True,
+                f.metadata,
+            )
+            for f in a.fields
+        ] + new)
+    if a == b:
+        return a
+    raise _NeedsInference
 
 
 @dataclass
@@ -91,44 +176,12 @@ class PartitionedTable:
         if os.path.exists(self._legacy_manifest_path):
             with open(self._legacy_manifest_path) as f:
                 log = json.load(f)
-        if os.path.exists(self._manifest_path):
-            with open(self._manifest_path) as f:
-                lines = [ln for ln in f.read().splitlines() if ln.strip()]
-            for i, ln in enumerate(lines):
-                try:
-                    log.append(json.loads(ln))
-                except json.JSONDecodeError:
-                    if i == len(lines) - 1:
-                        break  # torn final line: crash mid-append, ignore
-                    raise
-        return log
+        return log + read_jsonl(self._manifest_path)
 
     def _append_manifest(self, entry: dict) -> None:
-        os.makedirs(self.path, exist_ok=True)
-        # repair a torn final line (crash mid-append: the json+"\n" write
-        # was cut before the newline) BEFORE appending — once a good line
-        # follows it, read could no longer tell it from corruption.  Its
-        # version dir was never referenced; the reused seq overwrites it.
-        if os.path.exists(self._manifest_path):
-            with open(self._manifest_path, "r+") as f:
-                data = f.read()
-                if data and not data.endswith("\n"):
-                    # A newline-less tail that still PARSES is a commit
-                    # readers already accept (_read_manifest tolerates a
-                    # missing final newline) — complete it rather than
-                    # rolling back an observable snapshot.  Only an
-                    # unparseable tail is a true torn write.
-                    tail = data[data.rfind("\n") + 1:]
-                    try:
-                        json.loads(tail)
-                        f.write("\n")
-                    except json.JSONDecodeError:
-                        f.seek(data.rfind("\n") + 1)
-                        f.truncate()
-        with open(self._manifest_path, "a") as f:
-            f.write(json.dumps(entry) + "\n")
-            f.flush()
-            os.fsync(f.fileno())
+        # a torn final line's version dir was never referenced; the
+        # reused seq overwrites it
+        append_jsonl(self._manifest_path, [entry])
 
     def _entry_to_snapshot(self, e: dict) -> Snapshot:
         return Snapshot(
@@ -169,6 +222,48 @@ class PartitionedTable:
         return info
 
     # -- IO ------------------------------------------------------------
+    def _leaf(self, vdir: str, partition: str) -> str:
+        return os.path.join(
+            vdir, f"{self.partition_col}={escape_path_name(partition)}"
+        )
+
+    def _recorded_schema(self, vdirs: list[str]) -> StructType | None:
+        """The commit-recorded schemas of ``vdirs`` merged in order; None
+        when a dir predates the sidecar or the merge needs inference."""
+        schemas = []
+        for d in vdirs:
+            path = os.path.join(d, _SCHEMA_FILE)
+            if not os.path.exists(path):
+                return None
+            with open(path) as f:
+                schemas.append(StructType.fromJson(json.load(f)))
+        try:
+            return functools.reduce(_merge_types, schemas)
+        except _NeedsInference:
+            return None
+
+    def _footer_counts(self, vdir: str) -> dict[str, int]:
+        """Rows per partition of a just-written version dir, summed from
+        its parquet footers.  A NULL partition value (Spark's
+        ``__HIVE_DEFAULT_PARTITION__`` dir) rejects the commit."""
+        prefix = f"{self.partition_col}="
+        counts = {}
+        for name in sorted(os.listdir(vdir)):
+            if not name.startswith(prefix):
+                continue
+            if name[len(prefix):] == _NULL_PARTITION_DIR:
+                raise ValueError(
+                    f"{self.path}: NULL values in partition column "
+                    f"{self.partition_col!r} — commit rejected (filter or "
+                    "fill nulls before writing)"
+                )
+            leaf = os.path.join(vdir, name)
+            counts[unescape_path_name(name[len(prefix):])] = sum(
+                pq.read_metadata(os.path.join(leaf, f)).num_rows
+                for f in os.listdir(leaf) if f.endswith(".parquet")
+            )
+        return counts
+
     def read(
         self,
         spark: SparkSession,
@@ -198,7 +293,15 @@ class PartitionedTable:
         not a downstream join).  Mutually exclusive with ``merge_schema``
         semantics (the explicit schema IS the merged view), so it wins.
 
-        A manifest-listed dir missing on disk raises (silently skipping
+        Without ``schema``, the read schema is the one each wanted version
+        dir recorded at commit (``_schema.json``), merged locally in
+        scan order exactly as ``mergeSchema`` would merge the footers — or
+        the first dir's alone with ``merge_schema=False`` — so planning a
+        read launches no Spark job.  Dirs committed before the sidecar
+        existed fall back to footer inference.
+
+        A partition name missing from the snapshot raises, and so does a
+        manifest-listed dir missing on disk (silently skipping either
         would under-read committed data).
         """
         snap = (
@@ -206,54 +309,58 @@ class PartitionedTable:
         )
         if snap is None:
             raise FileNotFoundError(f"table {self.path} has no snapshot")
-        wanted = sorted(snap.mapping) if partitions is None else [
-            p for p in sorted(snap.mapping) if p in set(partitions)
-        ]
+        if partitions is not None:
+            unknown = sorted(set(partitions) - set(snap.mapping))
+            if unknown:
+                raise FileNotFoundError(
+                    f"{self.path}: partitions {unknown} are not in snapshot "
+                    f"{snap.snapshot_id}"
+                )
+        wanted = sorted(snap.mapping if partitions is None else set(partitions))
         leaf_dirs, missing = [], []
         for p in wanted:
             for d in snap.mapping[p]:
-                leaf = os.path.join(
-                    d, f"{self.partition_col}={escape_path_name(p)}"
-                )
+                leaf = self._leaf(d, p)
                 (leaf_dirs if os.path.exists(leaf) else missing).append(leaf)
+        # version dirs in scan order: the order mergeSchema meets them
+        vdirs = list(dict.fromkeys(d for p in wanted for d in snap.mapping[p]))
         if missing:
             raise FileNotFoundError(
                 f"{self.path}: {len(missing)} manifest-listed dirs missing on "
                 f"disk (data corruption or external delete), e.g. {missing[0]}"
             )
-        if not leaf_dirs:
-            # Distinguish "partition unknown" (error) from "every wanted
-            # partition is a legitimately committed EMPTY partition"
-            # (zero-dir mapping — the empty-commit semantics added round
-            # 5): the latter must read back as an empty frame, not crash
-            # an incremental run whose changed partitions decoded to zero
-            # rows (round-5 ADVICE).  Schema comes from the caller or
-            # from any non-empty partition of the same snapshot.
-            if wanted and all(not snap.mapping[p] for p in wanted):
-                if schema is not None:
-                    return spark.createDataFrame([], schema).withColumn(
-                        self.partition_col, F.lit(None).cast("string")
-                    )
-                donor = [
-                    os.path.join(
-                        d, f"{self.partition_col}={escape_path_name(p)}"
-                    )
-                    for p in sorted(snap.mapping)
-                    for d in snap.mapping[p]
-                ]
-                donor = [d for d in donor if os.path.exists(d)]
-                if donor:
-                    df = spark.read.parquet(donor[0]).limit(0)
-                    return df.withColumn(
-                        self.partition_col, F.lit(None).cast("string")
-                    )
-                raise FileNotFoundError(
-                    f"{self.path}: all wanted partitions are empty and the "
-                    "table holds no data to infer a schema from — pass "
-                    "`schema=` to read an all-empty table"
-                )
+        if not wanted:
             raise FileNotFoundError(
                 f"no data for partitions={partitions} in {self.path}"
+            )
+        if not leaf_dirs:
+            # every wanted partition is a legitimately committed EMPTY
+            # partition (zero-dir mapping): it reads back as an empty
+            # frame, not a crash of an incremental run whose changed
+            # partitions decoded to zero rows.  Schema comes from the
+            # caller or from any non-empty partition of the same snapshot.
+            if schema is None:
+                donor = next(
+                    ((d, p) for p in sorted(snap.mapping)
+                     for d in snap.mapping[p]
+                     if os.path.exists(self._leaf(d, p))),
+                    None,
+                )
+                if donor is None:
+                    raise FileNotFoundError(
+                        f"{self.path}: all wanted partitions are empty and "
+                        "the table holds no data to infer a schema from — "
+                        "pass `schema=` to read an all-empty table"
+                    )
+                schema = self._recorded_schema([donor[0]])
+                if schema is None:  # pre-sidecar donor: infer
+                    schema = spark.read.parquet(self._leaf(*donor)).schema
+            return spark.createDataFrame([], schema).withColumn(
+                self.partition_col, F.lit(None).cast("string")
+            )
+        if schema is None:
+            schema = self._recorded_schema(
+                vdirs if merge_schema else vdirs[:1]
             )
         reader = spark.read
         if schema is not None:
@@ -321,23 +428,17 @@ class PartitionedTable:
         seq = max(max_seq + 1, len(log))
         vdir = os.path.join(self.data_path, f"v{seq:04d}")
         df.write.partitionBy(self.partition_col).mode("overwrite").parquet(vdir)
-
-        # count ONLY the new version dir (commit cost ∝ rows written);
-        # explicit schema so an all-empty write (zero rows → no parquet
-        # files, just _SUCCESS) commits an empty snapshot instead of
-        # failing schema inference
-        spark = df.sparkSession
-        written = spark.read.schema(df.schema).option(
-            "basePath", vdir
-        ).parquet(vdir)
-        counted = written.groupBy(self.partition_col).count().collect()
-        if any(r[0] is None for r in counted):
-            raise ValueError(
-                f"{self.path}: NULL values in partition column "
-                f"{self.partition_col!r} — commit rejected (filter or fill "
-                "nulls before writing)"
-            )
-        new_counts = {str(r[0]): int(r[1]) for r in counted}
+        # bookkeeping without a Spark job: row counts from the
+        # footers of the files just written (commit cost ∝ rows written),
+        # schema recorded next to them for reads to use instead of
+        # inference.  A zero-row write leaves no partition dir and commits
+        # an empty snapshot.
+        new_counts = self._footer_counts(vdir)
+        data_schema = StructType(
+            [f for f in df.schema.fields if f.name != self.partition_col]
+        )
+        with open(os.path.join(vdir, _SCHEMA_FILE), "w") as f:
+            f.write(_as_nullable(data_schema).json())
 
         # `log` already holds the parsed manifest — don't re-read it
         prev = self._entry_to_snapshot(log[-1]) if log else None

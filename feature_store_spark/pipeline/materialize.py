@@ -42,14 +42,19 @@ Assumes daily event-date partitioning (partition value = "YYYY-MM-DD" of
 (``materialize_pipeline.py:178-201``).
 
 Lifecycle per observation-date partition D:
-  1. skip if the checkpoint manifest already records (input_snapshot, D)
+  1. skip if the checkpoint manifest already records D under its current
+     CONTENT key (:func:`materialize_keys`): the obs version dirs of D,
+     the feature and state version dirs of every partition ≤ D, and the
+     lookback — everything D's output reads.  A new day recomputes only
+     itself; a backfill of day b recomputes exactly the dates ≥ b, whose
+     feature/state partitions the window chain rewrote.
   2. assemble state@<D ∪ features@D (manifest-pruned reads, no listing)
   3. as-of join for obs rows in D
   4. overwrite exactly partition D of the output (idempotent)
   5. append a lineage record + mark D done in the checkpoint
 
-Because each partition is self-contained and keyed by the *input snapshot
-id*, any partition's features can be re-derived deterministically (the
+Because each partition is self-contained and keyed by its inputs' content,
+any partition's features can be re-derived deterministically (the
 backfill contract, reference X3 ``materialize_pipeline.py:74-107``), and a
 killed job resumes by skipping completed partitions.
 """
@@ -57,6 +62,7 @@ killed job resumes by skipping completed partitions.
 from __future__ import annotations
 
 import datetime as _dt
+import hashlib
 import json
 import os
 
@@ -64,6 +70,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from feature_store_spark.functions.images import with_image_features
+from feature_store_spark.io.jsonl import append_jsonl, read_jsonl
 from feature_store_spark.io.tables import PartitionedTable
 from feature_store_spark.operators.asof import (
     SKEW_STRATEGY_THRESHOLD,
@@ -103,28 +110,23 @@ _EMPTY_FEATURES_DDL = (
 
 
 class CheckpointManifest:
-    """Done-partition log keyed by (input snapshot id, partition)."""
+    """Done-partition log: one line per (partition, content key) computed
+    (see :func:`materialize_keys`)."""
 
     def __init__(self, path: str):
         self.path = path
 
-    def _load(self) -> list[dict]:
-        if not os.path.exists(self.path):
-            return []
-        with open(self.path) as f:
-            return [json.loads(line) for line in f if line.strip()]
-
-    def done_partitions(self, input_snapshot: str) -> set[str]:
-        return {
-            e["partition"] for e in self._load()
-            if e["input_snapshot"] == input_snapshot
+    def done_partitions(self, keys: dict[str, str]) -> set[str]:
+        """Partitions whose current content key ``keys[p]`` is recorded."""
+        done = {
+            (e.get("partition"), e.get("key")) for e in read_jsonl(self.path)
         }
+        return {p for p, k in keys.items() if (p, k) in done}
 
-    def mark_done(self, input_snapshot: str, partition: str) -> None:
-        os.makedirs(os.path.dirname(self.path) or ".", exist_ok=True)
-        with open(self.path, "a") as f:
-            f.write(json.dumps({"input_snapshot": input_snapshot,
-                                "partition": partition}) + "\n")
+    def mark_done(self, keys: dict[str, str]) -> None:
+        append_jsonl(
+            self.path, [{"partition": p, "key": k} for p, k in keys.items()]
+        )
 
 
 class LineageLog:
@@ -134,15 +136,13 @@ class LineageLog:
         self.path = path
 
     def append(self, record: dict) -> None:
-        os.makedirs(os.path.dirname(self.path) or ".", exist_ok=True)
-        with open(self.path, "a") as f:
-            f.write(json.dumps(record, sort_keys=True) + "\n")
+        self.extend([record])
+
+    def extend(self, records: list[dict]) -> None:
+        append_jsonl(self.path, records, sort_keys=True)
 
     def records(self) -> list[dict]:
-        if not os.path.exists(self.path):
-            return []
-        with open(self.path) as f:
-            return [json.loads(line) for line in f if line.strip()]
+        return read_jsonl(self.path)
 
 
 def compute_features(images: DataFrame) -> DataFrame:
@@ -496,15 +496,15 @@ def update_feature_table(
             },
         )
         if lineage is not None:
-            for part in dec_changed:
-                lineage.append(
-                    {
-                        "kind": "decode",
-                        "partition": part,
-                        "input_snapshot": snap.snapshot_id,
-                        "rows_decoded": dsnap.partitions.get(part, 0),
-                    }
-                )
+            lineage.extend([
+                {
+                    "kind": "decode",
+                    "partition": part,
+                    "input_snapshot": snap.snapshot_id,
+                    "rows_decoded": dsnap.partitions.get(part, 0),
+                }
+                for part in dec_changed
+            ])
     dec_map = decoded_table.current_snapshot().mapping
 
     # -- stage A': per-partition mergeable sketches over the decoded
@@ -636,6 +636,7 @@ def update_feature_table(
             },
         )
         if lineage is not None:
+            records = []
             for part in span:
                 # per-partition context = every READY-or-in-span partition
                 # inside the rolling window BY DATE RANGE — a count-based
@@ -644,7 +645,7 @@ def update_feature_table(
                 # pre-span context and included out-of-window neighbors
                 # when partition dates are sparse)
                 part_lo = _date_minus(part, ROLL_CTX_DAYS)
-                lineage.append(
+                records.append(
                     {
                         "kind": "feature_update",
                         "partition": part,
@@ -656,6 +657,7 @@ def update_feature_table(
                         "state_kind": kinds[part],
                     }
                 )
+            lineage.extend(records)
         processed.extend(span)
     return processed
 
@@ -706,6 +708,39 @@ def strategy_from_lineage(lineage: LineageLog) -> str | None:
     return None
 
 
+def materialize_keys(
+    obs_table: PartitionedTable,
+    features_table: PartitionedTable,
+    state_table: PartitionedTable,
+    lookback: str | None,
+) -> dict[str, str]:
+    """Content key per obs-date partition D: a digest of D's obs version
+    dirs, the feature and state version dirs of every partition ≤ D, and
+    ``lookback``.  Dirs are immutable and every commit writes new ones, so
+    equal keys mean equal as-of output for D.  One running hash over the
+    sorted history keeps this O(partitions) for the whole table."""
+
+    def dirs(t: PartitionedTable) -> list[tuple[str, list[str]]]:
+        snap = t.current_snapshot()
+        return sorted(snap.mapping.items()) if snap else []
+
+    history = sorted(
+        (p, name, sorted(d))
+        for name, t in (("features", features_table), ("state", state_table))
+        for p, d in dirs(t)
+    )
+    h = hashlib.sha256(json.dumps(lookback).encode())
+    keys, i = {}, 0
+    for part, obs_dirs in dirs(obs_table):
+        while i < len(history) and history[i][0] <= part:
+            h.update(json.dumps(history[i]).encode())
+            i += 1
+        k = h.copy()
+        k.update(json.dumps(sorted(obs_dirs)).encode())
+        keys[part] = k.hexdigest()[:16]
+    return keys
+
+
 def _chunks(seq: list, n: int):
     for i in range(0, len(seq), n):
         yield seq[i:i + n]
@@ -728,8 +763,9 @@ def materialize(
     """Materialize PIT features per observation-date partition.
 
     ``dates=None`` → incremental: all obs partitions not yet checkpointed
-    for the current input snapshot.  Explicit ``dates`` → backfill those
-    partitions (idempotent overwrite).  Returns the partitions processed.
+    under their current content key (:func:`materialize_keys`).  Explicit
+    ``dates`` → backfill those partitions (idempotent overwrite).  Returns
+    the partitions processed.
 
     Consecutive obs dates are processed ``batch_dates`` per Spark job
     (round-3 judge: a 365-date backfill ran 365 sequential driver
@@ -776,8 +812,9 @@ def materialize(
     )
 
     obs_parts = obs_table.partitions()
+    keys = materialize_keys(obs_table, features_table, state_table, lookback)
     if dates is None:
-        done = checkpoint.done_partitions(snap.snapshot_id)
+        done = checkpoint.done_partitions(keys)
         todo = [p for p in obs_parts if p not in done]
     else:
         todo = [p for p in obs_parts if p in set(dates)]
@@ -896,11 +933,12 @@ def materialize(
         wm_sorted = sorted(
             (r["__feat_part"], r["wm"]) for r in wm_rows if r["wm"] is not None
         )
+        records = []
         for part in batch:
             srow = stats.get(part)
             wms = [wm for p, wm in wm_sorted if p == "" or p <= part]
             watermark = max(wms) if wms else None
-            lineage.append(
+            records.append(
                 {
                     "partition": part,
                     "input_snapshot": snap.snapshot_id,
@@ -918,6 +956,7 @@ def materialize(
                     "asof_strategy": strategy,
                 }
             )
-            checkpoint.mark_done(snap.snapshot_id, part)
-            processed.append(part)
+        lineage.extend(records)
+        checkpoint.mark_done({p: keys[p] for p in batch})
+        processed.extend(batch)
     return processed

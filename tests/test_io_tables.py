@@ -50,6 +50,9 @@ def test_snapshot_manifest(spark, df, tmp_path):
     assert t.new_partitions_vs(["a"]) == ["b", "c"]
     # partition-pruned read
     assert t.read(spark, partitions=["a"]).count() == 2
+    # a typo'd partition name raises instead of silently under-reading
+    with pytest.raises(FileNotFoundError, match="'zz'"):
+        t.read(spark, partitions=["a", "zz"])
 
 
 def test_single_scan_plan_many_partitions(spark, tmp_path):

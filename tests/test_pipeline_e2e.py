@@ -441,6 +441,60 @@ def test_backfill_redecodes_only_changed_partition(spark, setup, tmp_path):
         ).all(), c
 
 
+def test_incremental_materialize_recomputes_only_changed_dates(
+    spark, setup, tmp_path
+):
+    """The checkpoint is keyed by each date's content (its obs dirs, the
+    feature/state dirs of partitions <= it, the lookback), not by the
+    images snapshot: landing a new day recomputes that day alone, a
+    backfill of day b recomputes exactly the dates >= b, and the output
+    equals a fresh full run over the same tables."""
+    root, img_pdf, obs_pdf, _, _ = setup
+    base = str(tmp_path)
+    days = sorted(set(img_pdf.event_date) & set(obs_pdf.obs_date))
+    new, b = days[-1], days[1]
+    images_t = PartitionedTable(base, "images", "event_date")
+    obs_t = PartitionedTable(base, "obs", "obs_date")
+    images_t.write(spark.createDataFrame(img_pdf[img_pdf.event_date < new]),
+                   mode="overwrite")
+    obs_t.write(spark.createDataFrame(obs_pdf[obs_pdf.obs_date < new]),
+                mode="overwrite")
+
+    def run(name, lookback=None):
+        return materialize(
+            spark, images_t, obs_t,
+            PartitionedTable(f"{base}/{name}", "out", "obs_date"),
+            CheckpointManifest(f"{base}/{name}/_ckpt.jsonl"),
+            LineageLog(f"{base}/{name}/_lineage.jsonl"),
+            features_table=PartitionedTable(base, "feats", "event_date"),
+            state_table=PartitionedTable(base, "state", "event_date"),
+            asof_strategy="union", lookback=lookback,
+        )
+
+    first = run("inc")
+    assert first == obs_t.partitions()
+    assert run("inc") == []
+    # a new day lands: only it recomputes
+    images_t.write(spark.createDataFrame(img_pdf[img_pdf.event_date == new]))
+    obs_t.write(spark.createDataFrame(obs_pdf[obs_pdf.obs_date == new]))
+    assert run("inc") == [new]
+    # a backfill of day b: exactly the dates >= b
+    changed = img_pdf[img_pdf.event_date == b].iloc[1:]
+    images_t.write(spark.createDataFrame(changed))
+    assert run("inc") == [d for d in obs_t.partitions() if d >= b]
+    # a different lookback is a different output: every date recomputes
+    assert run("inc", lookback="1d") == obs_t.partitions()
+    assert run("inc", lookback="1d") == []
+    key = ["image_id", "obs_time", "phash"]
+    got = PartitionedTable(f"{base}/inc", "out", "obs_date").read(spark)
+    run("fresh", lookback="1d")
+    want = PartitionedTable(f"{base}/fresh", "out", "obs_date").read(spark)
+    pd.testing.assert_frame_equal(
+        got.toPandas().sort_values(key, kind="stable").reset_index(drop=True),
+        want.toPandas().sort_values(key, kind="stable").reset_index(drop=True),
+    )
+
+
 def test_stage_b_batching_equals_per_partition(spark, setup, tmp_path):
     """Round-4 stage-B batching: one span call of the window chain +
     batched delta/snapshot state commit must equal partition-by-partition
