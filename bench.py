@@ -178,7 +178,8 @@ def bench_skew_pass(spark, ev_path: str, obs_path: str, strategy: str) -> float:
     """One union-or-sliced pass of the 50%-hot-entity as-of (same data,
     same session): the round-1 claim 'sliced beats union under skew',
     measured."""
-    from feature_store_spark.operators.asof import asof_join, release_sliced_caches
+    from feature_store_spark.operators.asof import asof_join
+    from feature_store_spark.operators.caches import release_caches
 
     events = spark.read.parquet(ev_path)
     obs = spark.read.parquet(obs_path)
@@ -192,7 +193,7 @@ def bench_skew_pass(spark, ev_path: str, obs_path: str, strategy: str) -> float:
         )
     )
     dt = time.time() - t0
-    release_sliced_caches()
+    release_caches()
     spark.catalog.clearCache()
     return dt
 
@@ -256,7 +257,7 @@ def previous_bench() -> tuple[str | None, dict]:
 
 
 def main() -> None:
-    from feature_store_spark.operators.asof import release_sliced_caches
+    from feature_store_spark.operators.caches import release_caches
     from feature_store_spark.registry import REGISTRY
     from feature_store_spark.session import get_spark
 
@@ -277,13 +278,13 @@ def main() -> None:
     _noop(warm_fn(spark, "/root/testdata/sf0.001"))
     warm_py, _ = REGISTRY["cosine_topk"]
     _noop(warm_py(spark, "/root/testdata/sf0.001"))
-    release_sliced_caches()
+    release_caches()
     spark.catalog.clearCache()
 
     # cold image-pipeline pass (includes Arrow worker spin-up) — measured
     # once, before any warm pass
     cold = bench_image_pipeline(spark, img_path, obs_path)
-    release_sliced_caches()
+    release_caches()
     spark.catalog.clearCache()
 
     # interleaved rounds: the whole suite runs ROUNDS times end-to-end;
@@ -304,9 +305,9 @@ def main() -> None:
             t0 = time.time()
             _noop(fn(spark, SF_DIR))
             record(name, time.time() - t0)
-            release_sliced_caches()
+            release_caches()
         sec = bench_image_pipeline(spark, img_path, obs_path)
-        release_sliced_caches()
+        release_caches()
         spark.catalog.clearCache()
         record("image_feature_pipeline", sec)
         for strategy in ("union", "sliced"):

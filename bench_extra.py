@@ -44,7 +44,8 @@ def main() -> None:
     import pyspark.sql.functions as F
 
     from feature_store_spark.functions.images import with_image_features
-    from feature_store_spark.operators.asof import asof_join, release_sliced_caches
+    from feature_store_spark.operators.asof import asof_join
+    from feature_store_spark.operators.caches import release_caches
     from feature_store_spark.operators.windows import sessionize, with_rolling
     from feature_store_spark.registry import REGISTRY
     from feature_store_spark.session import get_spark
@@ -117,7 +118,7 @@ def main() -> None:
     _noop(warm_fn(spark, "/root/testdata/sf0.001"))
     warm_py, _ = REGISTRY["cosine_topk"]
     _noop(warm_py(spark, "/root/testdata/sf0.001"))
-    release_sliced_caches()
+    release_caches()
     spark.catalog.clearCache()
 
     samples: dict[str, list[float]] = {}
@@ -127,7 +128,7 @@ def main() -> None:
             t0 = time.time()
             _noop(build(name))
             samples.setdefault(name, []).append(round(time.time() - t0, 3))
-            release_sliced_caches()
+            release_caches()
             spark.catalog.clearCache()
     out = {
         "queries": {q: min(v) for q, v in samples.items()},

@@ -72,13 +72,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from feature_store_spark.functions.images import with_image_features
 from feature_store_spark.io.jsonl import append_jsonl, read_jsonl
 from feature_store_spark.io.tables import PartitionedTable
-from feature_store_spark.operators.asof import (
-    SKEW_STRATEGY_THRESHOLD,
-    asof_join,
-    duration_to_us,
-    skew_prefers_sliced,
-    sliced_cache_scope,
-)
+from feature_store_spark.operators.asof import asof_join, duration_to_us
+from feature_store_spark.operators.caches import cache_scope, register_cache
 from feature_store_spark.operators.windows import (
     sessionize,
     with_lag_lead,
@@ -678,36 +673,6 @@ def feature_lineage_for(features_table: PartitionedTable) -> LineageLog:
     return LineageLog(os.path.join(features_table.path, "_lineage.jsonl"))
 
 
-# SKEW_STRATEGY_THRESHOLD is defined next to the probe in operators.asof
-# (re-exported via the import above) so the lineage pick and the probe
-# share ONE metric (max rows-per-entity / mean) and one threshold.
-
-
-def strategy_from_lineage(lineage: LineageLog) -> str | None:
-    """Pick the as-of strategy from the most recent materialize lineage
-    record's skew figures instead of running a fresh probe, applying the
-    SAME decision as the probe (:func:`skew_prefers_sliced` — relative
-    depth ≥ 10× mean, or ≥ 2% hot share when ``feature_entities`` was
-    recorded).  The FEATURE side's entity heat
-    (``feature_skew_max_over_mean``, recorded per batch since round 4)
-    is what the sliced strategy exists for — one hot entity's timeline
-    landing in a single union-window task — so it decides when present;
-    the obs-side ``skew_max_over_mean`` is the fallback for pre-round-4
-    records (round-4 review: obs skew alone mis-picked union under a hot
-    FEATURE entity with uniform obs).  None when no record carries
-    either figure yet (first ever run)."""
-    for r in reversed(lineage.records()):
-        skew = r.get("feature_skew_max_over_mean")
-        n_ent = r.get("feature_entities")
-        if skew is None:
-            skew = r.get("skew_max_over_mean")
-            n_ent = None
-        prefers = skew_prefers_sliced(skew, n_ent)
-        if prefers is not None:
-            return "sliced" if prefers else "union"
-    return None
-
-
 def materialize_keys(
     obs_table: PartitionedTable,
     features_table: PartitionedTable,
@@ -755,7 +720,6 @@ def materialize(
     lineage: LineageLog,
     dates: list[str] | None = None,
     lookback: str | None = None,
-    asof_strategy: str = "sliced",
     features_table: PartitionedTable | None = None,
     state_table: PartitionedTable | None = None,
     batch_dates: int = 16,
@@ -773,7 +737,7 @@ def materialize(
     100× that serializes on driver round-trips, and the reference's
     backfill is one ranged job, ``materialize_pipeline.py:74-107``).  A
     batch [D1..Dn] as-of joins its obs against (state@<D1 ∪
-    features@[D1..Dn]) in ONE sliced join + ONE partitioned write: the
+    features@[D1..Dn]) in ONE as-of join + ONE partitioned write: the
     leakage guard (feature_ts ≤ obs_time) already confines each obs row
     to its own past, every pre-D1 event that could win is dominated by
     its entity's state row, and events in [D1..Dn] are joined exactly —
@@ -782,10 +746,10 @@ def materialize(
     counts, skew, watermark), computed from two small per-batch
     aggregation jobs; ~3 driver actions per batch ≪ 1 per date.
 
-    ``asof_strategy="auto"`` picks union vs sliced per batch from the
-    newest lineage record's ``skew_max_over_mean``
-    (:func:`strategy_from_lineage` — no extra counting job; defaults to
-    sliced on the first ever run).
+    The join is always the ``union`` as-of: the state layer already
+    reduces each entity's pre-batch history to one row, which is exactly
+    the carry ``sliced`` would recompute, and a hot entity's in-batch rows
+    span only the batch's own days.
 
     The feature/state tables default to hidden tables under the output
     table's directory; pass them explicitly to share one decoded feature
@@ -823,12 +787,6 @@ def materialize(
     processed = []
     for batch in _chunks(todo, max(1, batch_dates)):
         d1, dn = batch[0], batch[-1]
-        # per-batch strategy: lineage-recorded skew, no counting job
-        if asof_strategy == "auto":
-            strategy = strategy_from_lineage(lineage) or "sliced"
-        else:
-            strategy = asof_strategy
-
         obs = obs_table.read(spark, partitions=batch)
         # O(entities + batch days) feature frame: per-entity latest row
         # strictly before D1 (state) ∪ all feature rows of [D1..Dn].
@@ -865,13 +823,11 @@ def materialize(
                 "__feat_part", F.lit("")
             )
 
-        with sliced_cache_scope():
-            # three consumers per batch (as-of, watermark, feature-skew
-            # jobs) — persist the assembled frame once instead of
-            # re-running the state-resolution dedup window per consumer;
-            # registered to the scope, released after the batch commits
-            from feature_store_spark.operators.caches import register_cache
-
+        with cache_scope():
+            # two consumers per batch (as-of and watermark jobs) — persist
+            # the assembled frame once instead of re-running the
+            # state-resolution dedup window per consumer; registered to
+            # the scope, released after the batch commits
             feats = feats.persist()
             register_cache(feats)
             result = asof_join(
@@ -883,8 +839,6 @@ def materialize(
                 feature_cols=FEATURE_COLS,
                 tiebreak_cols=["phash", "caption"],
                 lookback=lookback,
-                strategy=strategy,
-                slice_duration="1d",
             )
 
             # lineage inputs for the WHOLE batch: one per-date row-count +
@@ -905,27 +859,6 @@ def materialize(
                 .agg(F.max("event_time").alias("wm"))
                 .collect()
             )
-            # FEATURE-side entity heat — what the sliced strategy exists
-            # for; one small per-batch aggregation recorded so the NEXT
-            # batch's "auto" choice keys on the right side's skew
-            fstat = (
-                feats.groupBy("image_id")
-                .agg(F.count(F.lit(1)).alias("c"))
-                .agg(
-                    F.max("c").alias("mx"),
-                    F.avg("c").alias("mean"),
-                    F.count(F.lit(1)).alias("n_entities"),
-                )
-                .first()
-            )
-            feature_skew = (
-                round(float(fstat["mx"]) / float(fstat["mean"]), 3)
-                if fstat and fstat["mean"] else None
-            )
-            feature_entities = (
-                int(fstat["n_entities"]) if fstat and fstat["mean"] else None
-            )
-
             out_snap = out_table.write(result, mode="overwrite_partitions")
 
         # watermark@D = max event_time over (state ∪ features ≤ D):
@@ -948,12 +881,9 @@ def materialize(
                         round(float(srow["mx"]) / float(srow["mean"]), 3)
                         if srow and srow["mean"] else None
                     ),
-                    "feature_skew_max_over_mean": feature_skew,
-                    "feature_entities": feature_entities,
                     "watermark": (
                         str(watermark) if watermark is not None else None
                     ),
-                    "asof_strategy": strategy,
                 }
             )
         lineage.extend(records)

@@ -13,12 +13,15 @@ Config keys (dict, or YAML loaded into one):
 
   raw_data_path     dir with images.parquet (+ observations.parquet)
   output_path       root for all produced tables / checkpoints / online KV
-  job_retry         attempts per stage (default 3)
+  job_retry         attempts per stage (default 3); each retry is recorded
+                    in ``retry_log`` (main.py prints it), and input errors
+                    (:data:`NOT_RETRYABLE`) fail on the first attempt
   job_retry_sec     backoff seconds between attempts (default 0)
   num_date_eval     offline eval window: last N obs dates (default all)
-  asof_strategy     "auto" (default: materialize picks from recorded
-                    lineage skew — free; training retrieval probes),
-                    "sliced", or "union"
+  asof_strategy     as-of strategy of the training retrieval: "union"
+                    (default) or "sliced" (opt-in for hot entities over
+                    full history); materialize always runs "union", its
+                    state layer already being the carry
   batch_dates       obs dates per Spark job in materialize (default 16)
   expire_keep_last  optional: expire all but the newest N snapshots of
                     the derived tables at the end of run_all (storage
@@ -38,10 +41,12 @@ import os
 import time
 
 import pyspark.sql.functions as F
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 
 from feature_store_spark.io.tables import PartitionedTable
-from feature_store_spark.operators.asof import sliced_cache_scope
+from feature_store_spark.operators.asof import ASOF_STRATEGIES
+from feature_store_spark.operators.caches import cache_scope
 from feature_store_spark.pipeline.infer import OnlineStore, infer
 from feature_store_spark.pipeline.materialize import (
     CheckpointManifest,
@@ -63,15 +68,26 @@ from feature_store_spark.plans.features import (
 )
 
 
+# errors that fail again on the same input: retrying them only delays the
+# report by job_retry × job_retry_sec
+NOT_RETRYABLE = (
+    ValueError, TypeError, KeyError, AssertionError, AnalysisException,
+)
+
+
 def run_with_retry(fn, retries: int = 3, backoff_sec: float = 0.0,
                    stage: str = "", on_retry=None):
     """Reference X7: retry a stage up to ``retries`` times with fixed
     backoff (``feature_pipeline.py:75-79`` job_retry/job_retry_sec).  The
-    engine's partition checkpoints make retried stages resume, not redo."""
+    engine's partition checkpoints make retried stages resume, not redo.
+    :data:`NOT_RETRYABLE` errors are raised on the first attempt;
+    ``on_retry(stage, attempt, exc)`` is called before each retry."""
     last: Exception | None = None
     for attempt in range(1, max(retries, 1) + 1):
         try:
             return fn()
+        except NOT_RETRYABLE:
+            raise
         except Exception as e:  # noqa: BLE001 — stage boundary, rethrown
             last = e
             if attempt >= max(retries, 1):
@@ -127,7 +143,12 @@ class FeaturePipeline:
         self.out = config["output_path"]
         self.retries = int(config.get("job_retry", 3))
         self.backoff = float(config.get("job_retry_sec", 0))
-        self.asof_strategy = config.get("asof_strategy", "auto")
+        self.asof_strategy = config.get("asof_strategy", "union")
+        if self.asof_strategy not in ASOF_STRATEGIES:
+            raise ValueError(
+                f"asof_strategy {self.asof_strategy!r}: want one of "
+                f"{ASOF_STRATEGIES}"
+            )
         self.batch_dates = int(config.get("batch_dates", 16))
         self.images_t = PartitionedTable(self.out, "images", "event_date")
         self.obs_t = PartitionedTable(self.out, "observations", "obs_date")
@@ -137,10 +158,17 @@ class FeaturePipeline:
         self.store = OnlineStore(os.path.join(self.out, "online"))
         self.registry: FeatureRegistry | None = None
         self.stage_log: list[str] = []
+        self.retry_log: list[dict] = []
 
     def _retry(self, fn, stage: str):
         self.stage_log.append(stage)
-        return run_with_retry(fn, self.retries, self.backoff, stage)
+        return run_with_retry(fn, self.retries, self.backoff, stage,
+                              on_retry=self._record_retry)
+
+    def _record_retry(self, stage: str, attempt: int, exc: Exception):
+        self.retry_log.append(
+            {"stage": stage, "attempt": attempt, "error": type(exc).__name__}
+        )
 
     # -- stages (names mirror the reference methods) ---------------------
 
@@ -197,7 +225,7 @@ class FeaturePipeline:
             # scope the sliced strategy's per-anchor persists to this
             # stage: released right after the training frame is written,
             # instead of accumulating for the session's lifetime
-            with sliced_cache_scope():
+            with cache_scope():
                 train = get_offline_features(
                     obs, sources, self.registry, obs_time="obs_time",
                     asof_strategy=self.asof_strategy,
@@ -224,7 +252,6 @@ class FeaturePipeline:
                 CheckpointManifest(os.path.join(self.out, "_checkpoint.jsonl")),
                 LineageLog(os.path.join(self.out, "_lineage.jsonl")),
                 dates=dates,
-                asof_strategy=self.asof_strategy,
                 features_table=self.features_t,
                 state_table=self.state_t,
                 batch_dates=self.batch_dates,

@@ -69,6 +69,7 @@ def main(argv: list[str] | None = None) -> int:
             pipe.register_features()
         getattr(pipe, STAGES[args.stage])()
     print(json.dumps({"stages_run": pipe.stage_log,
+                      "retries": pipe.retry_log,
                       "output_path": config["output_path"]}))
     return 0
 

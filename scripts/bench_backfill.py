@@ -146,7 +146,7 @@ def main() -> None:
         t0 = time.time()
         done = materialize(
             spark, images_t, obs_t, out_t, ckpt, mlin,
-            asof_strategy="sliced", batch_dates=batch,
+            batch_dates=batch,
             features_table=feats_t, state_table=state_t,
         )
         sec = time.time() - t0

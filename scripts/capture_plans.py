@@ -103,8 +103,8 @@ def main() -> None:
         with open(path, "w") as f:
             f.write(text)
         print("wrote", path)
-    from feature_store_spark.operators.asof import release_sliced_caches
-    release_sliced_caches()
+    from feature_store_spark.operators.caches import release_caches
+    release_caches()
     spark.stop()
 
 

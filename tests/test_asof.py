@@ -149,87 +149,18 @@ def test_strategies_identical_with_ties(spark):
     pd.testing.assert_frame_equal(a, b)
 
 
-def test_auto_strategy_picks_by_skew(spark, simple):
-    """strategy='auto' probes entity skew: a 50%-hot feature side routes
-    to sliced, a balanced one to union; results identical either way."""
-    from feature_store_spark.operators.asof import choose_asof_strategy
-    from feature_store_spark.pipeline.datagen_spark import synth_feature_events
-
-    hot = synth_feature_events(spark, 20_000, 1_000, hot_fraction=0.5)
-    balanced = synth_feature_events(spark, 20_000, 1_000, skew_power=1)
-    assert choose_asof_strategy(hot, "entity_id") == "sliced"
-    assert choose_asof_strategy(balanced, "entity_id") == "union"
-
-    obs, feats = simple
-    a = asof_join(obs, feats, feature_cols=["v"], tiebreak_cols=["seq"],
-                  strategy="auto").toPandas()
-    b = asof_join(obs, feats, feature_cols=["v"], tiebreak_cols=["seq"],
-                  strategy="union").toPandas()
-    key = ["image_id", "obs_time"]
-    pd.testing.assert_frame_equal(
-        a.sort_values(key).reset_index(drop=True),
-        b.sort_values(key).reset_index(drop=True),
-    )
-
-
-def test_probe_and_lineage_strategy_agree(spark, tmp_path):
-    """Round-5 unification (round-4 judge #3): the counting probe
-    (choose_asof_strategy) and the lineage pick (strategy_from_lineage)
-    share ONE metric — max/mean rows per entity — and one threshold, so
-    feeding the same frame through both paths yields the same choice."""
-    import pyspark.sql.functions as F
-
-    from feature_store_spark.operators import asof as asof_mod
-    from feature_store_spark.operators.asof import choose_asof_strategy
-    from feature_store_spark.pipeline import materialize as mat_mod
-    from feature_store_spark.pipeline.datagen_spark import synth_feature_events
-    from feature_store_spark.pipeline.materialize import (
-        LineageLog,
-        strategy_from_lineage,
-    )
-
-    assert mat_mod.SKEW_STRATEGY_THRESHOLD == asof_mod.SKEW_STRATEGY_THRESHOLD
-
-    frames = [
-        synth_feature_events(spark, 20_000, 1_000, hot_fraction=0.5),
-        synth_feature_events(spark, 20_000, 1_000, skew_power=1),
-        # low-cardinality absolute dominance: 20 entities, one owns 30%
-        # of rows — max/mean is only ~6 but the hot SHARE routes to
-        # sliced (round-5 review clause)
-        synth_feature_events(spark, 20_000, 20, skew_power=1,
-                             hot_fraction=0.3),
-    ]
-    choices = []
-    for i, df in enumerate(frames):
-        # record skew exactly as materialize's per-batch lineage job does
-        st = (
-            df.groupBy("entity_id").agg(F.count(F.lit(1)).alias("c"))
-            .agg(F.max("c").alias("mx"), F.avg("c").alias("mean"),
-                 F.count(F.lit(1)).alias("n")).first()
-        )
-        skew = round(float(st["mx"]) / float(st["mean"]), 3)
-        lin = LineageLog(str(tmp_path / f"lin_{i}.jsonl"))
-        lin.append({"partition": "p", "feature_skew_max_over_mean": skew,
-                    "feature_entities": int(st["n"])})
-        assert strategy_from_lineage(lin) == choose_asof_strategy(
-            df, "entity_id"
-        )
-        choices.append(strategy_from_lineage(lin))
-    assert choices == ["sliced", "union", "sliced"]  # all clauses hit
-
-
 def test_sliced_cache_scoping(spark, simple):
     """Caches register to the innermost scope and are unpersisted on exit;
-    unscoped caches stay global until release_sliced_caches (round-2
+    unscoped caches stay global until release_caches (round-2
     ADVICE: scope per call site, don't over-release other callers')."""
-    from feature_store_spark.operators import asof as asof_mod
-    from feature_store_spark.operators.asof import (
-        release_sliced_caches,
-        sliced_cache_scope,
+    from feature_store_spark.operators import caches as caches_mod
+    from feature_store_spark.operators.caches import (
+        cache_scope,
+        release_caches,
     )
 
     obs, feats = simple
-    release_sliced_caches()
+    release_caches()
 
     def run_sliced(slice_duration="30m"):
         # distinct slice_duration per call → distinct logical plans, as at
@@ -240,12 +171,12 @@ def test_sliced_cache_scoping(spark, simple):
         out.count()
         return out
 
-    with sliced_cache_scope() as outer:
+    with cache_scope() as outer:
         run_sliced()
-        assert len(outer) == 1 and not asof_mod._SLICED_CACHES
+        assert len(outer) == 1 and not caches_mod._GLOBAL_CACHES
         cached = outer[0]
         assert cached.storageLevel.useMemory  # persisted while in scope
-        with sliced_cache_scope() as inner:
+        with cache_scope() as inner:
             run_sliced(slice_duration="15m")
             assert len(inner) == 1 and len(outer) == 1  # no cross-register
         assert not inner  # inner released on exit...
@@ -253,5 +184,5 @@ def test_sliced_cache_scoping(spark, simple):
     assert not cached.storageLevel.useMemory  # released at outer exit
 
     run_sliced()  # outside any scope → global list, explicit release
-    assert len(asof_mod._SLICED_CACHES) == 1
-    assert release_sliced_caches() == 1 and not asof_mod._SLICED_CACHES
+    assert len(caches_mod._GLOBAL_CACHES) == 1
+    assert release_caches() == 1 and not caches_mod._GLOBAL_CACHES

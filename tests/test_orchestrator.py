@@ -4,6 +4,7 @@ one config dict drives preprocess → register → train → materialize
 
 from __future__ import annotations
 
+import json
 import os
 
 import pandas as pd
@@ -18,6 +19,8 @@ from feature_store_spark.pipeline.orchestrator import (
     FeaturePipeline,
     run_with_retry,
 )
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 @pytest.fixture(scope="module")
@@ -128,7 +131,64 @@ def test_stage_retry_then_success():
         run_with_retry(always_fails, retries=2, backoff_sec=0)
 
 
-def test_yaml_cli_front_door(spark, config, tmp_path):
+def test_non_retryable_error_runs_once(tmp_path):
+    """A ValueError fails again on the same input: it is raised on the
+    first attempt, and no retry is recorded."""
+    pipe = FeaturePipeline(
+        {"raw_data_path": str(tmp_path), "output_path": str(tmp_path)},
+        spark=None,
+    )
+    calls = {"n": 0}
+
+    def bad_input():
+        calls["n"] += 1
+        raise ValueError("bad input")
+
+    with pytest.raises(ValueError, match="bad input"):
+        pipe._retry(bad_input, "training")
+    assert calls["n"] == 1
+    assert pipe.retry_log == []
+
+
+def test_retries_are_recorded(tmp_path):
+    pipe = FeaturePipeline(
+        {"raw_data_path": str(tmp_path), "output_path": str(tmp_path),
+         "job_retry": 3},
+        spark=None,
+    )
+    calls = {"n": 0}
+
+    def flaky():
+        calls["n"] += 1
+        if calls["n"] < 3:
+            raise RuntimeError("transient")
+        return "ok"
+
+    assert pipe._retry(flaky, "materialize_offline") == "ok"
+    assert pipe.retry_log == [
+        {"stage": "materialize_offline", "attempt": 1,
+         "error": "RuntimeError"},
+        {"stage": "materialize_offline", "attempt": 2,
+         "error": "RuntimeError"},
+    ]
+
+
+def test_asof_strategy_checked_at_construction(tmp_path):
+    """The shipped example config builds a pipeline; a retired or
+    misspelt as-of strategy fails in the constructor, before any stage
+    (``spark=None`` proves no Spark call precedes the check)."""
+    import main as cli
+
+    cfg = cli.load_config(os.path.join(REPO, "configs", "example_config.yaml"))
+    cfg["output_path"] = str(tmp_path)
+    pipe = FeaturePipeline(cfg, spark=None)
+    assert pipe.asof_strategy in ("union", "sliced")
+    for bad in ("auto", "slcied"):
+        with pytest.raises(ValueError, match="union.*sliced"):
+            FeaturePipeline({**cfg, "asof_strategy": bad}, spark=None)
+
+
+def test_yaml_cli_front_door(spark, config, tmp_path, capsys):
     """`python main.py --config config.yaml` parity: the YAML round-trips
     into the same dict the orchestrator takes, and main() drives run_all
     end-to-end (reference main.py:42-61)."""
@@ -145,6 +205,8 @@ def test_yaml_cli_front_door(spark, config, tmp_path):
 
     rc = cli.main(["--config", path])
     assert rc == 0
+    line = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert line["retries"] == []
     assert os.path.exists(os.path.join(out, "training_features.parquet"))
     assert os.path.exists(os.path.join(out, "infer_features.parquet"))
     served = pd.read_parquet(os.path.join(out, "infer_features.parquet"))

@@ -77,14 +77,16 @@ def _oracle_output(img_pdf: pd.DataFrame, obs_pdf: pd.DataFrame) -> pd.DataFrame
     )
 
 
+LINEAGE_FIELDS = {"partition", "input_snapshot", "rows_obs", "rows_out",
+                  "skew_max_over_mean", "watermark"}
+
+
 def _run_all(spark, setup, subdir: str):
     root, img_pdf, obs_pdf, images_t, obs_t = setup
     out_t = PartitionedTable(f"{root}/{subdir}", "features", "obs_date")
     ckpt = CheckpointManifest(f"{root}/{subdir}/_checkpoint.jsonl")
     lin = LineageLog(f"{root}/{subdir}/_lineage.jsonl")
-    processed = materialize(
-        spark, images_t, obs_t, out_t, ckpt, lin, asof_strategy="sliced"
-    )
+    processed = materialize(spark, images_t, obs_t, out_t, ckpt, lin)
     return out_t, ckpt, lin, processed
 
 
@@ -135,6 +137,7 @@ def test_lineage_records(full_run, setup):
     assert len(recs) == len(processed) == obs_pdf["obs_date"].nunique()
     first_event_date = setup[1]["event_time"].min().strftime("%Y-%m-%d")
     for r in recs:
+        assert set(r) == LINEAGE_FIELDS
         assert r["input_snapshot"].startswith("snap-")
         assert r["rows_obs"] == r["rows_out"] > 0  # row preservation
         assert r["skew_max_over_mean"] >= 1.0
@@ -142,6 +145,26 @@ def test_lineage_records(full_run, setup):
         # horizon predates the first feature event
         if r["partition"] >= first_event_date:
             assert r["watermark"] is not None
+
+
+def test_lineage_log_with_retired_fields_stays_readable(spark, setup):
+    """Records written before the as-of strategy pick was removed still
+    carry its fields; a run appends to such a log and both read back."""
+    root, _, _, images_t, obs_t = setup
+    lin = LineageLog(f"{root}/oldlin/_lineage.jsonl")
+    old = {"partition": "2000-01-01", "input_snapshot": "snap-0",
+           "rows_obs": 1, "rows_out": 1, "skew_max_over_mean": 1.0,
+           "feature_skew_max_over_mean": 2.0, "feature_entities": 3,
+           "watermark": None, "asof_strategy": "sliced"}
+    lin.append(old)
+    out_t = PartitionedTable(f"{root}/oldlin", "features", "obs_date")
+    ckpt = CheckpointManifest(f"{root}/oldlin/_checkpoint.jsonl")
+    d = obs_t.partitions()[0]
+    assert materialize(spark, images_t, obs_t, out_t, ckpt, lin,
+                       dates=[d]) == [d]
+    recs = lin.records()
+    assert recs[0] == old
+    assert [set(r) for r in recs[1:]] == [LINEAGE_FIELDS]
 
 
 def test_resume_skips_done_partitions(spark, setup, full_run):
@@ -153,10 +176,9 @@ def test_resume_skips_done_partitions(spark, setup, full_run):
     lin = LineageLog(f"{root}/resume/_lineage.jsonl")
     all_parts = obs_t.partitions()
     first = materialize(spark, images_t, obs_t, out_t, ckpt, lin,
-                        dates=all_parts[:3], asof_strategy="union")
+                        dates=all_parts[:3])
     assert first == all_parts[:3]
-    resumed = materialize(spark, images_t, obs_t, out_t, ckpt, lin,
-                          asof_strategy="union")
+    resumed = materialize(spark, images_t, obs_t, out_t, ckpt, lin)
     assert resumed == all_parts[3:]  # finished partitions skipped
     a = out_t.read(spark).toPandas().sort_values(
         ["image_id", "obs_time", "phash"], kind="stable").reset_index(drop=True)
@@ -175,8 +197,7 @@ def test_batched_equals_per_date(spark, setup, full_run):
     out_t = PartitionedTable(f"{root}/perdate", "features", "obs_date")
     ckpt = CheckpointManifest(f"{root}/perdate/_checkpoint.jsonl")
     lin = LineageLog(f"{root}/perdate/_lineage.jsonl")
-    materialize(spark, images_t, obs_t, out_t, ckpt, lin,
-                asof_strategy="sliced", batch_dates=1)
+    materialize(spark, images_t, obs_t, out_t, ckpt, lin, batch_dates=1)
     key = ["image_id", "obs_time", "phash"]
     a = out_t.read(spark).toPandas().sort_values(
         key, kind="stable").reset_index(drop=True)
@@ -189,50 +210,6 @@ def test_batched_equals_per_date(spark, setup, full_run):
     for p in fa:
         for k in ("rows_obs", "rows_out", "watermark", "skew_max_over_mean"):
             assert fa[p][k] == fb[p][k], (p, k)
-
-
-def test_auto_strategy_follows_lineage_without_probe(
-    spark, setup, monkeypatch
-):
-    """asof_strategy='auto' picks union/sliced from the newest lineage
-    record's skew — with NO probe/counting job (round-2 carry-over task).
-    choose_asof_strategy (the probing path) is poisoned to prove the
-    choice never launches one."""
-    import feature_store_spark.operators.asof as asof_mod
-    from feature_store_spark.pipeline.materialize import strategy_from_lineage
-
-    root, img_pdf, obs_pdf, images_t, obs_t = setup
-    out_t = PartitionedTable(f"{root}/auto", "features", "obs_date")
-    ckpt = CheckpointManifest(f"{root}/auto/_checkpoint.jsonl")
-    lin = LineageLog(f"{root}/auto/_lineage.jsonl")
-    monkeypatch.setattr(
-        asof_mod, "choose_asof_strategy",
-        lambda *a, **k: (_ for _ in ()).throw(
-            AssertionError("auto must not run a probe job")),
-    )
-    parts = obs_t.partitions()
-    materialize(spark, images_t, obs_t, out_t, ckpt, lin,
-                dates=parts[:1], asof_strategy="auto")
-    recs = lin.records()
-    # first ever run: no lineage yet → safe default
-    assert recs[0]["asof_strategy"] == "sliced"
-    # the record carries BOTH sides' skew (feature side may be None for
-    # an obs date that predates every feature event); the newest record
-    # with either figure decides, feature side preferred
-    assert "feature_skew_max_over_mean" in recs[0]
-    want = strategy_from_lineage(lin)
-    assert want in ("union", "sliced")
-    materialize(spark, images_t, obs_t, out_t, ckpt, lin,
-                dates=parts[1:2], asof_strategy="auto")
-    assert lin.records()[-1]["asof_strategy"] == want
-    # a recorded hot FEATURE entity flips the next choice to sliced even
-    # with placid obs skew (round-4 review: obs skew alone mis-picked)
-    lin.append({"partition": "synthetic", "skew_max_over_mean": 1.0,
-                "feature_skew_max_over_mean": 99.0})
-    assert strategy_from_lineage(lin) == "sliced"
-    materialize(spark, images_t, obs_t, out_t, ckpt, lin,
-                dates=parts[2:3], asof_strategy="auto")
-    assert lin.records()[-1]["asof_strategy"] == "sliced"
 
 
 def test_decode_once_across_dates(spark, setup):
@@ -253,8 +230,7 @@ def test_decode_once_across_dates(spark, setup):
 
     dates = obs_t.partitions()[:3]
     for d in dates:  # three separate materialize runs, one date each
-        materialize(spark, images_t, obs_t, out_t, ckpt, lin,
-                    dates=[d], asof_strategy="sliced")
+        materialize(spark, images_t, obs_t, out_t, ckpt, lin, dates=[d])
     assert rows_decoded_total(flin) == len(img_pdf)
     # one feature-update record per image partition, none repeated
     recs = [r for r in flin.records() if r["kind"] == "feature_update"]
@@ -348,7 +324,7 @@ def test_backfill_idempotent(spark, setup, full_run):
     out_t, ckpt, lin, processed = full_run
     before = out_t.read(spark, partitions=[processed[0]]).toPandas()
     again = materialize(spark, images_t, obs_t, out_t, ckpt, lin,
-                        dates=[processed[0]], asof_strategy="sliced")
+                        dates=[processed[0]])
     assert again == [processed[0]]
     after = out_t.read(spark, partitions=[processed[0]]).toPandas()
     key = ["image_id", "obs_time", "phash"]
@@ -371,7 +347,7 @@ def test_backfill_non_adjacent_dates_in_one_batch(spark, setup, full_run):
     ckpt = CheckpointManifest(f"{root}/gap/_checkpoint.jsonl")
     lin = LineageLog(f"{root}/gap/_lineage.jsonl")
     done = materialize(spark, images_t, obs_t, out_t, ckpt, lin,
-                       dates=picked, asof_strategy="sliced", batch_dates=16)
+                       dates=picked, batch_dates=16)
     assert done == picked
     key = ["image_id", "obs_time", "phash"]
     a = out_t.read(spark).toPandas().sort_values(
@@ -468,7 +444,7 @@ def test_incremental_materialize_recomputes_only_changed_dates(
             LineageLog(f"{base}/{name}/_lineage.jsonl"),
             features_table=PartitionedTable(base, "feats", "event_date"),
             state_table=PartitionedTable(base, "state", "event_date"),
-            asof_strategy="union", lookback=lookback,
+            lookback=lookback,
         )
 
     first = run("inc")

@@ -99,6 +99,55 @@ def test_empty_partition_read_uses_recorded_schema(spark, tmp_path):
     assert out.count() == 0
 
 
+def test_one_new_date_materialize_job_count(spark, tmp_path):
+    """A new day's incremental materialize runs a pinned number of Spark
+    jobs, so an added per-batch job (a skew probe, a second carry over
+    the state rows) shows up as a count change."""
+    from feature_store_spark.pipeline.datagen import (
+        generate_images,
+        generate_observations,
+    )
+    from feature_store_spark.pipeline.materialize import (
+        CheckpointManifest,
+        LineageLog,
+        feature_lineage_for,
+        materialize,
+        update_feature_table,
+    )
+
+    root = str(tmp_path)
+    img = generate_images(n_rows=160, n_entities=10, seed=41)
+    obs = generate_observations(img, n_obs=60, seed=42)
+    img["event_date"] = img["event_time"].dt.strftime("%Y-%m-%d")
+    obs["obs_date"] = obs["obs_time"].dt.strftime("%Y-%m-%d")
+    new = sorted(set(img.event_date) & set(obs.obs_date))[-1]
+    images_t = PartitionedTable(root, "images", "event_date")
+    obs_t = PartitionedTable(root, "obs", "obs_date")
+    feats_t = PartitionedTable(root, "features", "event_date")
+    state_t = PartitionedTable(root, "state", "event_date")
+    out_t = PartitionedTable(root, "pit", "obs_date")
+    ckpt = CheckpointManifest(os.path.join(root, "_ckpt.jsonl"))
+    lin = LineageLog(os.path.join(root, "_lineage.jsonl"))
+
+    def run():
+        update_feature_table(spark, images_t, feats_t, state_t,
+                             feature_lineage_for(feats_t))
+        return _spark_jobs(spark, lambda: materialize(
+            spark, images_t, obs_t, out_t, ckpt, lin,
+            features_table=feats_t, state_table=state_t))
+
+    images_t.write(spark.createDataFrame(img[img.event_date < new]),
+                   mode="overwrite")
+    obs_t.write(spark.createDataFrame(obs[obs.obs_date < new]),
+                mode="overwrite")
+    run()
+    images_t.write(spark.createDataFrame(img[img.event_date == new]))
+    obs_t.write(spark.createDataFrame(obs[obs.obs_date == new]))
+    done, n = run()
+    assert done == [new]
+    assert n == 9, f"one-new-date materialize ran {n} jobs, want 9"
+
+
 # ---------------------------------------------------------------------
 # recorded schema == inferred schema
 # ---------------------------------------------------------------------
@@ -136,8 +185,7 @@ def engine_tables(spark, tmp_path_factory):
 
     def run():
         materialize(spark, images_t, obs_t, out_t, ckpt, lin,
-                    features_table=feats_t, state_table=state_t,
-                    asof_strategy="union")
+                    features_table=feats_t, state_table=state_t)
 
     images_t.write(spark.createDataFrame(img[img.event_date < days[-1]]),
                    mode="overwrite")
