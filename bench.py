@@ -146,31 +146,12 @@ def _noop(df) -> None:
 def bench_image_pipeline(spark, img_path: str, obs_path: str) -> float:
     """The flagship materialization: decode → rolling → session → as-of.
     Returns wall seconds for one full pass."""
-    import pyspark.sql.functions as F
-
-    from feature_store_spark.functions.images import with_image_features
-    from feature_store_spark.operators.asof import asof_join
-    from feature_store_spark.operators.windows import sessionize, with_rolling
+    from feature_store_spark.pipeline.flagship import flagship_frame
 
     images = spark.read.parquet(img_path)
     obs = spark.read.parquet(obs_path)
     t0 = time.time()
-    feats = with_image_features(images)
-    feats = with_rolling(
-        feats, "image_id", "event_time",
-        {"roll_cnt": F.count(F.lit(1)), "roll_mean_r": F.avg("mean_r")},
-        window="1d",
-    )
-    feats = sessionize(feats, "image_id", "event_time", gap="30m", tiebreak=["phash"])
-    result = asof_join(
-        obs, feats,
-        feature_cols=["phash", "mean_r", "mean_g", "mean_b", "std_r",
-                      "roll_cnt", "roll_mean_r", "session_id"],
-        tiebreak_cols=["phash"],
-        strategy="sliced",
-        slice_duration="1d",
-    )
-    _noop(result)
+    _noop(flagship_frame(obs, images))
     return time.time() - t0
 
 
@@ -178,20 +159,13 @@ def bench_skew_pass(spark, ev_path: str, obs_path: str, strategy: str) -> float:
     """One union-or-sliced pass of the 50%-hot-entity as-of (same data,
     same session): the round-1 claim 'sliced beats union under skew',
     measured."""
-    from feature_store_spark.operators.asof import asof_join
     from feature_store_spark.operators.caches import release_caches
+    from feature_store_spark.pipeline.flagship import skewed_asof
 
     events = spark.read.parquet(ev_path)
     obs = spark.read.parquet(obs_path)
     t0 = time.time()
-    _noop(
-        asof_join(
-            obs, events,
-            on="entity_id", obs_time="obs_time", feature_time="event_time",
-            feature_cols=["fv1", "fv2"], tiebreak_cols=["seq"],
-            strategy=strategy, slice_duration="1d",
-        )
-    )
+    _noop(skewed_asof(obs, events, strategy))
     dt = time.time() - t0
     release_caches()
     spark.catalog.clearCache()
@@ -241,14 +215,21 @@ def previous_bench() -> tuple[str | None, dict]:
             # '{"metric": ... "queries": {"<first>":').  The remaining
             # fragment is the original object's exact suffix: prepending
             # a queries-dict opener reconstructs everything except the
-            # first (renamed) query.
+            # first (renamed) query.  A cut inside a later dict ("spread",
+            # "samples", ...) also parses, so the rebuild counts only if
+            # "sf" (the key right after "queries") survived and every
+            # query value is a time.
             lines = doc["tail"].splitlines()
             frag = lines[-1].strip() if lines else ""
             if frag:
                 try:
                     rec = json.loads('{"queries": {"__truncated__":' + frag)
                     rec["queries"].pop("__truncated__", None)
-                    doc = rec
+                    if "sf" in rec and all(
+                        isinstance(v, (int, float)) and not isinstance(v, bool)
+                        for v in rec["queries"].values()
+                    ):
+                        doc = rec
                 except json.JSONDecodeError:
                     pass
         return os.path.basename(path), doc

@@ -1,5 +1,5 @@
 """Round-6 optimization harness: per-query noop-sink timing in ONE session
-(interleaved min-of-N), plus image-pipeline stage decomposition.
+(interleaved min-of-N).
 
 This is the §1.4-style isolation bench the optimization guide asks for;
 ``bench.py`` itself is FROZEN for driver measurement and stays untouched.
@@ -7,7 +7,6 @@ This is the §1.4-style isolation bench the optimization guide asks for;
 Usage:
   python bench_extra.py q1 q2 ...            # registry/composite names
   python bench_extra.py --rounds 5 q1 q2
-  python bench_extra.py image_stages         # decode / windows / asof split
 
 Prints one JSON line: {"queries": {name: min_sec}, "samples": {...}, ...}.
 Session shape matches bench.py exactly (local[$SPARK_GRAFT_CPUS],
@@ -41,12 +40,8 @@ def main() -> None:
         args = args[2:]
     names = args or ["winnow_fingerprint", "minhash_signatures", "lsh_pairs"]
 
-    import pyspark.sql.functions as F
-
-    from feature_store_spark.functions.images import with_image_features
-    from feature_store_spark.operators.asof import asof_join
     from feature_store_spark.operators.caches import release_caches
-    from feature_store_spark.operators.windows import sessionize, with_rolling
+    from feature_store_spark.pipeline.flagship import flagship_frame, skewed_asof
     from feature_store_spark.registry import REGISTRY
     from feature_store_spark.session import get_spark
 
@@ -56,56 +51,19 @@ def main() -> None:
         extra_conf={"spark.sql.files.maxPartitionBytes": "1m"},
     )
 
-    img_path = os.path.join(BENCH_DATA, "images_150000.parquet")
-    obs_path = os.path.join(BENCH_DATA, "obs_150000.parquet")
-    ev_path = os.path.join(BENCH_DATA, "skew_events_2000000.parquet")
-    sobs_path = os.path.join(BENCH_DATA, "skew_obs_200000.parquet")
-
-    def image_full():
-        images = spark.read.parquet(img_path)
-        obs = spark.read.parquet(obs_path)
-        feats = with_image_features(images)
-        feats = with_rolling(
-            feats, "image_id", "event_time",
-            {"roll_cnt": F.count(F.lit(1)), "roll_mean_r": F.avg("mean_r")},
-            window="1d")
-        feats = sessionize(feats, "image_id", "event_time", gap="30m",
-                           tiebreak=["phash"])
-        return asof_join(
-            obs, feats,
-            feature_cols=["phash", "mean_r", "mean_g", "mean_b", "std_r",
-                          "roll_cnt", "roll_mean_r", "session_id"],
-            tiebreak_cols=["phash"], strategy="sliced", slice_duration="1d")
-
-    def image_decode():
-        return with_image_features(spark.read.parquet(img_path))
-
-    def image_windows():
-        feats = with_image_features(spark.read.parquet(img_path))
-        feats = with_rolling(
-            feats, "image_id", "event_time",
-            {"roll_cnt": F.count(F.lit(1)), "roll_mean_r": F.avg("mean_r")},
-            window="1d")
-        return sessionize(feats, "image_id", "event_time", gap="30m",
-                          tiebreak=["phash"])
+    def data(name):
+        return spark.read.parquet(os.path.join(BENCH_DATA, name))
 
     def skew(strategy):
-        events = spark.read.parquet(ev_path)
-        obs = spark.read.parquet(sobs_path)
-        return asof_join(
-            obs, events, on="entity_id", obs_time="obs_time",
-            feature_time="event_time", feature_cols=["fv1", "fv2"],
-            tiebreak_cols=["seq"], strategy=strategy, slice_duration="1d")
+        return skewed_asof(data("skew_obs_200000.parquet"),
+                           data("skew_events_2000000.parquet"), strategy)
 
     composites = {
-        "image_feature_pipeline": image_full,
-        "image_decode": image_decode,
-        "image_windows": image_windows,
+        "image_feature_pipeline": lambda: flagship_frame(
+            data("obs_150000.parquet"), data("images_150000.parquet")),
         "asof_skew_union": lambda: skew("union"),
         "asof_skew_sliced": lambda: skew("sliced"),
     }
-    if names == ["image_stages"]:
-        names = ["image_decode", "image_windows", "image_feature_pipeline"]
 
     def build(name):
         if name in composites:

@@ -912,16 +912,15 @@ _IMG_OBS_PATH = f"{_IMG_ORACLE_DIR}/obs.parquet"
 
 
 def q_image_pipeline(spark, sf):  # the full flagship, oracle-checked
-    """Deterministic in-Spark image gen → decode → rolling+session →
-    sliced as-of.  Writes generation-time truth sidecars so the DuckDB
-    oracle (SQL_IMAGE_PIPELINE) can replay the windows + PIT join over
-    ground-truth decode values."""
-    from feature_store_spark.functions.images import with_image_features
-    from feature_store_spark.operators.windows import sessionize, with_rolling
+    """Deterministic in-Spark image gen → the flagship chain
+    (``pipeline/flagship.py``).  Writes generation-time truth sidecars so
+    the DuckDB oracle (SQL_IMAGE_PIPELINE) can replay the windows + PIT
+    join over ground-truth decode values."""
     from feature_store_spark.pipeline.datagen_spark import (
         synth_images,
         synth_observations,
     )
+    from feature_store_spark.pipeline.flagship import flagship_frame
 
     n = 2000 if "0.001" not in sf else 500
     images = synth_images(spark, n, n_entities=max(n // 40, 5), truth=True)
@@ -935,16 +934,7 @@ def q_image_pipeline(spark, sf):  # the full flagship, oracle-checked
     ).coalesce(1).write.mode("overwrite").parquet(_IMG_TRUTH_PATH)
     obs.coalesce(1).write.mode("overwrite").parquet(_IMG_OBS_PATH)
 
-    feats = with_image_features(images.drop("truth_mean_r", "truth_std_r"))
-    feats = with_rolling(feats, "image_id", "event_time",
-                         {"roll_cnt": F.count(F.lit(1))}, window="1d")
-    feats = sessionize(feats, "image_id", "event_time", gap="30m",
-                       tiebreak=["phash"])
-    out = asof_join(
-        obs, feats,
-        feature_cols=["phash", "mean_r", "std_r", "roll_cnt", "session_id"],
-        tiebreak_cols=["phash"], strategy="sliced", slice_duration="1d",
-    )
+    out = flagship_frame(obs, images.drop("truth_mean_r", "truth_std_r"))
     return out.select("image_id", "obs_id", "obs_time", "feature_ts",
                       "phash", F.round("mean_r", R).alias("mean_r"),
                       F.col("roll_cnt").cast("long").alias("roll_cnt"),

@@ -13,13 +13,14 @@ Two strategies, identical results (property-tested):
   entity-partitioned window.  One shuffle by entity; simple; skew-prone when
   one entity owns a huge timeline (whole timeline lands in one task).
 
-* ``sliced`` — the production plan (SURVEY.md §7.2): both sides are hashed
-  into ``(entity, time-slice)`` partitions, the last feature row of each
-  earlier slice is *carried* forward to exactly the slices that contain
-  observations needing it, and the merge happens per ``(entity, slice)``
-  partition.  A hot entity's timeline splits across slices, which is the
-  "salted entity×event-time partitions" axis the north rule names; AQE skew
-  splitting stacks on top.
+* ``sliced`` — an explicit opt-in for full-history retrieval over hot
+  entities (SURVEY.md §7.2); ``union`` is the default.  Both sides are
+  hashed into ``(entity, time-slice)`` partitions, the last feature row of
+  each earlier slice is *carried* forward to exactly the slices that
+  contain observations needing it, and the merge happens per ``(entity,
+  slice)`` partition.  A hot entity's timeline splits across slices, which
+  is the "salted entity×event-time partitions" axis the north rule names;
+  AQE skew splitting stacks on top.
 
 Zero leakage is structural: a feature row can only be selected by the
 window frame ``rowsBetween(unboundedPreceding, currentRow)`` after sorting

@@ -204,9 +204,13 @@ def q_winnow_fingerprint(spark, sf):
     # distinct-invariant).  The Generate barrier (explode of a 1-element
     # array) materializes the distinct array ONCE per row so Project
     # collapse cannot re-inline the md5/zip_with chain into each of the
-    # three output expressions (Catalyst footgun #1/#2).
+    # three output expressions (Catalyst footgun #1/#2).  A NULL text
+    # hashes to [null]; array_compact drops it, as DuckDB's list_distinct
+    # does, so such a doc has no fingerprints.
     fps = d.select(
-        "doc_id", F.explode(F.array(F.array_distinct(wins))).alias("__fps")
+        "doc_id",
+        F.explode(F.array(F.array_compact(F.array_distinct(wins))))
+        .alias("__fps"),
     )
     return fps.select(
         "doc_id",

@@ -1,14 +1,24 @@
-"""Scaling-bench job: run via
-  spark-submit --master local[N] --py-files engine.zip scripts/bench_job.py \
-      <data_root> [n_feat] [n_obs] [n_images] [n_img_obs]
+"""Scaling-bench job, one workload per JVM:
 
-Phase 0 (one-time, cached in <data_root>): generate deterministic inputs —
-events via md5 expressions, images via executor-side pandas-UDF encode.
-Phase 1: windowed features (rolling+lag+session) + sliced as-of join over
-skewed entities.  Phase 2: image materialization (decode → features →
-as-of).  Prints one JSON line ``BENCHJSON {...}`` with wall-clock and
-rows/sec per phase; identical input across parallelism levels because
-generation is content-addressed by (seed, row id).
+  spark-submit --master <M> --py-files engine.zip scripts/bench_job.py \
+      <data_root> image <n_images> <n_obs> <passes>
+  spark-submit --master <M> --py-files engine.zip scripts/bench_job.py \
+      <data_root> dedup <n_docs> <n_words> <passes>
+
+Inputs are generated once into <data_root>, deterministic and
+content-addressed by (seed, row id), so both cluster sizes read the same
+rows.  ``passes=0`` only generates them.
+
+* ``image``: the flagship chain (``pipeline/flagship.py``).  After a warm
+  pass of the full chain on a deterministic ~8% subset (python-worker
+  spawn, codegen for every stage, shuffle buffer pools), it times the
+  DECODE stage alone and the FULL chain, so the report can split decode
+  capacity from the windows + as-of tail.
+* ``dedup``: MinHash → LSH candidate pairs over synthetic documents, on
+  the wide-signature path the product uses, plus MinHash alone.
+
+Each timed stage is the min over ``passes``.  Prints one JSON line
+``BENCHJSON {...}`` that ``scripts/scaling_report.py`` reads.
 """
 
 from __future__ import annotations
@@ -22,20 +32,100 @@ import pyspark.sql.functions as F
 from pyspark.sql import SparkSession
 
 
+def _noop(df) -> None:
+    df.write.format("noop").mode("overwrite").save()
+
+
+def _min_wall(spark, build, passes: int) -> float:
+    from feature_store_spark.operators.caches import release_caches
+
+    best = float("inf")
+    for _ in range(passes):
+        release_caches()  # each pass recomputes end-to-end
+        spark.catalog.clearCache()
+        t0 = time.time()
+        _noop(build())
+        best = min(best, time.time() - t0)
+    return round(best, 2)
+
+
+def image_phase(spark, data_root, n_images, n_obs, passes, out) -> None:
+    from feature_store_spark.functions.images import with_image_features
+    from feature_store_spark.pipeline.datagen_spark import (
+        synth_images,
+        synth_observations,
+    )
+    from feature_store_spark.pipeline.flagship import flagship_frame
+
+    cores = spark.sparkContext.defaultParallelism
+    n_ent = max(n_images // 300, 10)
+    img_path = os.path.join(data_root, f"images_{n_images}.parquet")
+    obs_path = os.path.join(data_root, f"imgobs_{n_obs}.parquet")
+    if not os.path.exists(img_path):
+        synth_images(spark, n_images, n_entities=n_ent) \
+            .repartition(max(cores * 4, 32)) \
+            .write.mode("overwrite").parquet(img_path)
+    if not os.path.exists(obs_path):
+        synth_observations(spark, n_obs, n_entities=n_ent, prefix="img_") \
+            .withColumnRenamed("entity_id", "image_id") \
+            .write.mode("overwrite").parquet(obs_path)
+    if not passes:
+        return
+
+    images = spark.read.parquet(img_path)
+    obs = spark.read.parquet(obs_path)
+    sub = F.pmod(F.xxhash64("image_id"), F.lit(12)) == 0
+    _noop(flagship_frame(obs.where(sub), images.where(sub)))
+    out.update(n_images=n_images, n_obs=n_obs)
+    out["decode_sec"] = _min_wall(
+        spark, lambda: with_image_features(images), passes)
+    out["full_sec"] = _min_wall(
+        spark, lambda: flagship_frame(obs, images), passes)
+    out["tail_sec"] = round(out["full_sec"] - out["decode_sec"], 2)
+
+
+def dedup_phase(spark, data_root, n_docs, n_words, passes, out) -> None:
+    from feature_store_spark.operators.dedup import (
+        lsh_candidate_pairs,
+        minhash_wide,
+    )
+    from feature_store_spark.pipeline.datagen_spark import synth_documents
+
+    # 40 words reproduces the round-5 short-doc regime; ~1000+ is the
+    # web-scale regime where the shingle/md5 CPU dominates the LSH tail
+    suffix = f"docs_{n_docs}" if n_words == 40 else f"docs_{n_docs}_w{n_words}"
+    docs_path = os.path.join(data_root, f"{suffix}.parquet")
+    if not os.path.exists(docs_path):
+        cores = spark.sparkContext.defaultParallelism
+        synth_documents(spark, n_docs, n_words=n_words) \
+            .repartition(max(cores * 4, 32)) \
+            .write.mode("overwrite").parquet(docs_path)
+    if not passes:
+        return
+
+    def minhash():
+        return minhash_wide(spark.read.parquet(docs_path), num_hashes=4)
+
+    def dedup():
+        return lsh_candidate_pairs(None, num_hashes=4, band_size=2,
+                                   max_bucket_size=64,
+                                   wide_signatures=minhash())
+
+    _noop(dedup())  # warm
+    out.update(n_docs=n_docs, n_words=n_words)
+    out["dedup_sec"] = _min_wall(spark, dedup, passes)
+    out["dedup_docs_per_sec"] = round(n_docs / out["dedup_sec"], 1)
+    # MinHash alone: the CPU-bound part (shingle explode + md5 mins, one
+    # groupBy with map-side combine), apart from the LSH tail's fixed
+    # shuffle-stage latency
+    out["minhash_sec"] = _min_wall(spark, minhash, passes)
+    out["minhash_docs_per_sec"] = round(n_docs / out["minhash_sec"], 1)
+
+
 def main() -> None:
-    data_root = sys.argv[1]
-    n_feat = int(sys.argv[2]) if len(sys.argv) > 2 else 4_000_000
-    n_obs = int(sys.argv[3]) if len(sys.argv) > 3 else 2_000_000
-    n_images = int(sys.argv[4]) if len(sys.argv) > 4 else 300_000
-    n_img_obs = int(sys.argv[5]) if len(sys.argv) > 5 else 300_000
-    phase = sys.argv[6] if len(sys.argv) > 6 else "all"
-    passes = int(sys.argv[7]) if len(sys.argv) > 7 else 2
-    n_docs_arg = int(sys.argv[8]) if len(sys.argv) > 8 else 1_000_000
-    # document length for the dedup phase: 40 (default) reproduces the
-    # round-5 short-doc regime; ~1000+ is the web-scale regime where the
-    # shingle/md5 CPU dominates the LSH shuffle tail (round-6 scaling
-    # evidence — VERDICT task 2)
-    n_words_arg = int(sys.argv[9]) if len(sys.argv) > 9 else 40
+    data_root, phase = sys.argv[1], sys.argv[2]
+    run = {"image": image_phase, "dedup": dedup_phase}[phase]
+    a, b, passes = (int(x) for x in sys.argv[3:6])
 
     spark = SparkSession.builder.getOrCreate()
     for k, v in {
@@ -47,177 +137,19 @@ def main() -> None:
         # binary image rows are cheap to store but expensive to decode:
         # size input splits for CPU parallelism, not byte volume
         "spark.sql.files.maxPartitionBytes": "8m",
+        # identical plan at both cluster sizes
+        "spark.sql.shuffle.partitions": "64",
     }.items():
         spark.conf.set(k, v)
-    cores = spark.sparkContext.defaultParallelism
-    spark.conf.set("spark.sql.shuffle.partitions", "64")  # identical plan at both cluster sizes
 
-    from feature_store_spark.functions.images import with_image_features
-    from feature_store_spark.operators.asof import asof_join
-    from feature_store_spark.operators.windows import (
-        sessionize,
-        with_lag_lead,
-        with_rolling,
-    )
-    from feature_store_spark.pipeline.datagen_spark import (
-        synth_feature_events,
-        synth_images,
-        synth_observations,
-    )
-
-    # ---- phase 0: cached deterministic inputs -------------------------
-    img_path = os.path.join(data_root, f"images_{n_images}.parquet")
-    if not os.path.exists(img_path):
-        synth_images(spark, n_images, n_entities=max(n_images // 300, 10)) \
-            .repartition(max(cores * 4, 32)) \
-            .write.mode("overwrite").parquet(img_path)
-    imgobs_path = os.path.join(data_root, f"imgobs_{n_img_obs}.parquet")
-    if not os.path.exists(imgobs_path):
-        synth_observations(
-            spark, n_img_obs, n_entities=max(n_images // 300, 10),
-            prefix="img_",
-        ).withColumnRenamed("entity_id", "image_id") \
-         .write.mode("overwrite").parquet(imgobs_path)
-
-    out: dict = {"cores": cores, "n_feat": n_feat, "n_obs": n_obs,
-                 "n_images": n_images}
-
-    # ---- phase 0b: cache the event-side inputs too, so the measured job
-    # is read → window → as-of (realistic), not datagen-bound ------------
-    n_ent = max(n_feat // 200, 10)
-    feat_path = os.path.join(data_root, f"events_{n_feat}.parquet")
-    if not os.path.exists(feat_path):
-        synth_feature_events(spark, n_feat, n_entities=n_ent) \
-            .write.mode("overwrite").parquet(feat_path)
-    obs_path = os.path.join(data_root, f"obs_{n_obs}.parquet")
-    if not os.path.exists(obs_path):
-        synth_observations(spark, n_obs, n_entities=n_ent) \
-            .write.mode("overwrite").parquet(obs_path)
-
-    def build_asof():
-        feats = spark.read.parquet(feat_path)
-        obs = spark.read.parquet(obs_path)
-        f = with_rolling(feats, "entity_id", "event_time",
-                         {"roll_sum": F.sum("fv1"),
-                          "roll_cnt": F.count(F.lit(1))},
-                         window="1d")
-        f = with_lag_lead(f, "entity_id", "event_time",
-                          {"lag_fv1": ("fv1", -1)}, tiebreak=["seq"])
-        f = sessionize(f, "entity_id", "event_time", gap="30m",
-                       tiebreak=["seq"])
-        return asof_join(
-            obs, f, on="entity_id", obs_time="obs_time",
-            feature_time="event_time",
-            feature_cols=["fv1", "fv2", "roll_sum", "roll_cnt", "lag_fv1",
-                          "session_id"],
-            tiebreak_cols=["seq"], strategy="sliced", slice_duration="1d",
-        )
-
-    if phase in ("all", "asof"):
-        build_asof().write.format("noop").mode("overwrite").save()  # warm
-        dt1 = float("inf")
-        for _ in range(passes):  # min of N measured passes (variance control)
-            spark.catalog.clearCache()  # drop strategy-internal persist:
-            t0 = time.time()            # each pass recomputes end-to-end
-            build_asof().write.format("noop").mode("overwrite").save()
-            dt1 = min(dt1, time.time() - t0)
-        out["asof_sec"] = round(dt1, 2)
-        out["asof_rows_per_sec"] = round(n_obs / dt1, 1)
-
-    # ---- phase 3: dedup stack (minhash → LSH candidate pairs) ---------
-    if phase in ("all", "dedup"):
-        from feature_store_spark.operators.dedup import (
-            lsh_candidate_pairs,
-            minhash_signatures,
-        )
-        from feature_store_spark.pipeline.datagen_spark import synth_documents
-
-        # big enough that the hash/shingle CPU dominates the fixed ~2 s
-        # shuffle-stage latency (at 200k docs the 32-core wall was 3.5 s
-        # and the measurement was latency-bound, not capacity-bound)
-        n_docs = n_docs_arg
-        n_words = n_words_arg
-        suffix = f"docs_{n_docs}" if n_words == 40 else \
-            f"docs_{n_docs}_w{n_words}"
-        docs_path = os.path.join(data_root, f"{suffix}.parquet")
-        if not os.path.exists(docs_path):
-            synth_documents(spark, n_docs, n_words=n_words) \
-                .repartition(max(cores * 4, 32)) \
-                .write.mode("overwrite").parquet(docs_path)
-
-        def build_dedup():
-            docs = spark.read.parquet(docs_path)
-            sig = minhash_signatures(docs, num_hashes=4)
-            return lsh_candidate_pairs(sig, num_hashes=4, band_size=2,
-                                       max_bucket_size=64)
-
-        build_dedup().write.format("noop").mode("overwrite").save()  # warm
-        dt3 = float("inf")
-        for _ in range(passes):
-            spark.catalog.clearCache()
-            t0 = time.time()
-            build_dedup().write.format("noop").mode("overwrite").save()
-            dt3 = min(dt3, time.time() - t0)
-        out["n_docs"] = n_docs
-        out["n_words"] = n_words
-        out["dedup_sec"] = round(dt3, 2)
-        out["dedup_docs_per_sec"] = round(n_docs / dt3, 1)
-
-        # minhash stage alone: the CPU-bound part (shingle explode + md5
-        # mins, one groupBy with map-side combine) — separates hash
-        # capacity from the LSH tail's fixed shuffle-stage latency
-        def build_minhash():
-            return minhash_signatures(
-                spark.read.parquet(docs_path), num_hashes=4
-            )
-
-        dt4 = float("inf")
-        for _ in range(passes):
-            t0 = time.time()
-            build_minhash().write.format("noop").mode("overwrite").save()
-            dt4 = min(dt4, time.time() - t0)
-        out["minhash_sec"] = round(dt4, 2)
-        out["minhash_docs_per_sec"] = round(n_docs / dt4, 1)
-
-    # ---- phase 2: image feature materialization (decode-heavy) --------
-    if phase not in ("all", "image"):
-        out["cores_end"] = spark.sparkContext.defaultParallelism
-        print("BENCHJSON " + json.dumps(out))
-        return
-
-    def build_image():
-        images = spark.read.parquet(img_path)
-        obs_img = spark.read.parquet(imgobs_path)
-        imf = with_image_features(images)
-        imf = with_rolling(imf, "image_id", "event_time",
-                           {"roll_cnt": F.count(F.lit(1))}, window="1d")
-        imf = sessionize(imf, "image_id", "event_time", gap="30m",
-                         tiebreak=["phash"])
-        return asof_join(
-            obs_img, imf,
-            feature_cols=["phash", "mean_r", "mean_g", "std_r", "roll_cnt",
-                          "session_id"],
-            tiebreak_cols=["phash"], strategy="sliced", slice_duration="1d",
-        )
-
-    n_img_obs_actual = spark.read.parquet(imgobs_path).count()
-    build_image().write.format("noop").mode("overwrite").save()  # warm pass
-    dt2 = float("inf")
-    for _ in range(2):
-        spark.catalog.clearCache()
-        t0 = time.time()
-        build_image().write.format("noop").mode("overwrite").save()
-        dt2 = min(dt2, time.time() - t0)
-    out["image_sec"] = round(dt2, 2)
-    out["image_rows_per_sec"] = round(n_img_obs_actual / dt2, 1)
-
-    if "asof_sec" in out and "image_sec" in out:
-        out["total_sec"] = round(out["asof_sec"] + out["image_sec"], 2)
-    # registered cores at END of the measured phases: local-cluster
+    out: dict = {"cores": spark.sparkContext.defaultParallelism}
+    run(spark, data_root, a, b, passes, out)
+    # registered cores at END of the measured stages: local-cluster
     # executors can register late (after the job started), so a sample is
     # valid only when cores == cores_end == the expected count
     out["cores_end"] = spark.sparkContext.defaultParallelism
     print("BENCHJSON " + json.dumps(out))
+    spark.stop()
 
 
 if __name__ == "__main__":

@@ -42,40 +42,19 @@ def main() -> None:
         extra_conf={"spark.sql.files.maxPartitionBytes": "1m"},
     )
 
-    # bench composites (mirror bench.py's construction, plans only)
-    import pyspark.sql.functions as F
+    # bench composites (bench.py's flagship and skew as-of, plans only)
+    from feature_store_spark.pipeline.flagship import flagship_frame, skewed_asof
 
-    from feature_store_spark.functions.images import with_image_features
-    from feature_store_spark.operators.asof import asof_join
-    from feature_store_spark.operators.windows import sessionize, with_rolling
+    def data(name):
+        return spark.read.parquet(os.path.join(REPO, "BENCH", "data", name))
 
     def image_feature_pipeline():
-        images = spark.read.parquet(
-            os.path.join(REPO, "BENCH", "data", "images_150000.parquet"))
-        obs = spark.read.parquet(
-            os.path.join(REPO, "BENCH", "data", "obs_150000.parquet"))
-        feats = with_image_features(images)
-        feats = with_rolling(
-            feats, "image_id", "event_time",
-            {"roll_cnt": F.count(F.lit(1)), "roll_mean_r": F.avg("mean_r")},
-            window="1d")
-        feats = sessionize(feats, "image_id", "event_time", gap="30m",
-                           tiebreak=["phash"])
-        return asof_join(
-            obs, feats,
-            feature_cols=["phash", "mean_r", "mean_g", "mean_b", "std_r",
-                          "roll_cnt", "roll_mean_r", "session_id"],
-            tiebreak_cols=["phash"], strategy="sliced", slice_duration="1d")
+        return flagship_frame(data("obs_150000.parquet"),
+                              data("images_150000.parquet"))
 
     def skew(strategy):
-        events = spark.read.parquet(
-            os.path.join(REPO, "BENCH", "data", "skew_events_2000000.parquet"))
-        obs = spark.read.parquet(
-            os.path.join(REPO, "BENCH", "data", "skew_obs_200000.parquet"))
-        return asof_join(
-            obs, events, on="entity_id", obs_time="obs_time",
-            feature_time="event_time", feature_cols=["fv1", "fv2"],
-            tiebreak_cols=["seq"], strategy=strategy, slice_duration="1d")
+        return skewed_asof(data("skew_obs_200000.parquet"),
+                           data("skew_events_2000000.parquet"), strategy)
 
     composites = {
         "image_feature_pipeline": image_feature_pipeline,

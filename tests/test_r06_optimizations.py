@@ -212,6 +212,27 @@ def test_winnow_maponly_equals_group_form(spark, tmp_path):
         [(f.name, f.dataType) for f in old.schema.fields]
 
 
+def test_winnow_edge_texts_match_oracle(spark, tmp_path):
+    """Empty, NULL, shorter-than-k, exactly-k and k+2 texts: Spark and the
+    DuckDB oracle agree row for row (a NULL text has no fingerprints)."""
+    import duckdb
+
+    from feature_store_spark import text_queries as tq
+    from feature_store_spark.pipeline.datagen import write_parquet
+
+    texts = ["", None, "abc", "abcdefgh", "abcdefghij"]
+    path = str(tmp_path / "documents.parquet")
+    write_parquet(pd.DataFrame({"doc_id": range(len(texts)), "text": texts,
+                                "lang": ["en"] * len(texts)}), path)
+    got = sorted(map(tuple, tq.q_winnow_fingerprint(spark, str(tmp_path))
+                     .collect()))
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM '{path}'")
+    want = sorted(con.execute(tq.SQL_WINNOW_FINGERPRINT).fetchall())
+    assert got == want
+    assert got[1] == (1, 0, None, None)
+
+
 # ---------------------------------------------------------------------
 # scan fan-out: adaptive, row-preserving
 # ---------------------------------------------------------------------
