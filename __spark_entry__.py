@@ -18,7 +18,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 
 def entry(spark: SparkSession) -> DataFrame:
-    """Flagship: PIT as-of join (sliced sorted-merge strategy) of purchase
+    """Flagship: PIT as-of join (union-tag window merge) of purchase
     observations against click feature history at sf0.001."""
     from feature_store_spark.entry_queries import q_asof_join
 

@@ -25,9 +25,8 @@ load step lands on different queries in different rounds, the min
 recovers the quiet-host figure, and a large spread on every query —
 together with the pure-python host probe timed before each round —
 stamps "the host was loaded" into the JSON instead of leaving it a
-hypothesis.  The skewed-as-of section times union vs sliced with one
-entity owning 50% of all rows — measured evidence for the sliced
-strategy's reason to exist.
+hypothesis.  The skewed-as-of section times the as-of join with one
+entity owning 50% of all rows.
 """
 
 from __future__ import annotations
@@ -155,19 +154,15 @@ def bench_image_pipeline(spark, img_path: str, obs_path: str) -> float:
     return time.time() - t0
 
 
-def bench_skew_pass(spark, ev_path: str, obs_path: str, strategy: str) -> float:
-    """One union-or-sliced pass of the 50%-hot-entity as-of (same data,
-    same session): the round-1 claim 'sliced beats union under skew',
-    measured."""
-    from feature_store_spark.operators.caches import release_caches
+def bench_skew_pass(spark, ev_path: str, obs_path: str) -> float:
+    """One pass of the 50%-hot-entity as-of."""
     from feature_store_spark.pipeline.flagship import skewed_asof
 
     events = spark.read.parquet(ev_path)
     obs = spark.read.parquet(obs_path)
     t0 = time.time()
-    _noop(skewed_asof(obs, events, strategy))
+    _noop(skewed_asof(obs, events))
     dt = time.time() - t0
-    release_caches()
     spark.catalog.clearCache()
     return dt
 
@@ -291,11 +286,7 @@ def main() -> None:
         release_caches()
         spark.catalog.clearCache()
         record("image_feature_pipeline", sec)
-        for strategy in ("union", "sliced"):
-            record(
-                f"asof_skew_{strategy}",
-                bench_skew_pass(spark, ev_path, sobs_path, strategy),
-            )
+        record("asof_skew_union", bench_skew_pass(spark, ev_path, sobs_path))
     probes.append(host_probe())
 
     times = {q: round(min(v), 3) for q, v in samples.items()}
@@ -304,10 +295,6 @@ def main() -> None:
         for q, v in samples.items()
     }
     img_sec = times["image_feature_pipeline"]
-    skew = {
-        "union": times["asof_skew_union"],
-        "sliced": times["asof_skew_sliced"],
-    }
 
     total = round(sum(times.values()), 3)
     prev_name, prev = previous_bench()
@@ -335,9 +322,7 @@ def main() -> None:
         "skew_asof": {
             "hot_entity_row_fraction": 0.5,
             "n_events": N_SKEW_EVENTS,
-            "union_sec": skew["union"],
-            "sliced_sec": skew["sliced"],
-            "sliced_speedup": round(skew["union"] / skew["sliced"], 2),
+            "union_sec": times["asof_skew_union"],
         },
         "deltas_vs_prev": deltas,
         "prev_bench": prev_name,

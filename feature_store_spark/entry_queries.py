@@ -375,8 +375,6 @@ def q_asof_join(spark, sf):  # J7: the flagship PIT join
         feature_time="ts",
         feature_cols=["value", "event_id"],
         tiebreak_cols=["event_id"],
-        strategy="sliced",
-        slice_duration="1d",
         feature_ts_col="click_ts",
     )
     return out.select(
@@ -408,7 +406,6 @@ def q_asof_lookback(spark, sf):  # J8: LATEST within 1d window
         feature_cols=["value", "event_id"],
         tiebreak_cols=["event_id"],
         lookback="1d",
-        strategy="union",
         feature_ts_col="click_ts",
     )
     return out.select(

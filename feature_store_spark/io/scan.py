@@ -18,10 +18,10 @@ tiebreaks everywhere).
 The split-count probe is a local-file SIZE ESTIMATE, not
 ``df.rdd.getNumPartitions()``: converting the frame to an RDD plans the
 query a second time and measured 120-190 ms of driver work per call —
-more than some whole queries save.  The estimate mirrors Spark's split
-packing (each file charged ``openCostInBytes`` on top of its size,
-divided by ``maxPartitionBytes``), which errs only by a small constant;
-an unparseable scheme or conf falls back to the exact RDD probe.
+more than some whole queries save.  The estimate mirrors Spark's file
+split planning (``FilePartition.maxSplitBytes`` and its next-fit-decreasing
+packing); a non-local scheme or an unparseable conf falls back to the
+exact RDD probe.
 """
 
 from __future__ import annotations
@@ -44,33 +44,49 @@ def _parse_bytes(v: str) -> int:
 
 
 def _estimated_splits(df: DataFrame) -> int | None:
-    """Approximate scan split count from local file sizes (Spark's
-    packing: each file costs size + openCostInBytes, packed into
-    maxPartitionBytes splits).  None when the estimate can't be made
+    """Scan split count from local file sizes, planned as Spark plans it:
+    the split size is ``min(maxPartitionBytes, max(openCostInBytes,
+    totalBytes / defaultParallelism))`` with each file charged
+    ``openCostInBytes`` in ``totalBytes``; files are cut into chunks of
+    that size and packed largest first, a split closing when the next
+    chunk would overflow it.  None when the estimate can't be made
     cheaply (non-local files, empty listing)."""
     spark = df.sparkSession
     files = df.inputFiles()
     if not files:
         return None
-    total = 0
+    sizes = []
     for f in files:
         p = urlparse(f)
         if p.scheme not in ("", "file"):
             return None
         try:
-            total += os.path.getsize(unquote(p.path))
+            sizes.append(os.path.getsize(unquote(p.path)))
         except OSError:
             return None
-    max_split = _parse_bytes(
+    max_bytes = _parse_bytes(
         spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728")
     )
     open_cost = _parse_bytes(
         spark.conf.get("spark.sql.files.openCostInBytes", "4194304")
     )
-    return max(1, (total + len(files) * open_cost) // max(max_split, 1))
+    total = sum(sizes) + len(sizes) * open_cost
+    per_core = total // spark.sparkContext.defaultParallelism
+    split = max(min(max_bytes, max(open_cost, per_core)), 1)
+    chunks = sorted(
+        (min(split, size - off) for size in sizes
+         for off in range(0, size, split)),
+        reverse=True,
+    )
+    n = cur = 0
+    for c in chunks:
+        if n == 0 or cur + c > split:
+            n, cur = n + 1, 0
+        cur += c + open_cost
+    return n
 
 
-def fan_out(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
+def fan_out(df: DataFrame) -> DataFrame:
     """Repartition ``df`` up to the session's default parallelism when its
     current partitioning has fewer slots — otherwise return it unchanged.
 
@@ -80,7 +96,7 @@ def fan_out(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
     exchange when the input is a handful of splits.
     """
     spark = df.sparkSession
-    target = min_partitions or spark.sparkContext.defaultParallelism
+    target = spark.sparkContext.defaultParallelism
     try:
         cur = _estimated_splits(df)
         if cur is None:

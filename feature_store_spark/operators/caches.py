@@ -1,10 +1,9 @@
 """Scoped registry for operator-internal persisted DataFrames.
 
 Some operators persist an intermediate whose cost must not be paid twice
-(the sliced as-of's merged union, connected components' final label
-table).  The persist must OUTLIVE the operator call — the caller
-materializes the returned DataFrame later — so the operator cannot
-unpersist it itself.  Each such cache is registered here, to the
+(LSH bucket membership, connected components' final label table).  The
+persist must OUTLIVE the operator call — the caller materializes the
+returned DataFrame later — so the operator cannot unpersist it itself.  Each such cache is registered here, to the
 innermost active :func:`cache_scope` (released when that scope exits —
 AFTER the caller materializes the output) or, outside any scope, to a
 process-global list released by :func:`release_caches`.
@@ -13,9 +12,9 @@ Without one of the two, a driver loop calling such an operator once per
 partition accumulates cached RDDs unbounded in a shared session (round-1
 ADVICE); a global-only mechanism in turn leaked on callers that never
 release and over-released on concurrent callers (round-2 ADVICE) —
-scopes fix both.  Round 4 generalized this from the sliced as-of to all
-operators (round-3 ADVICE: connected components' checkpoint blocks
-lingered for the session lifetime).
+scopes fix both.  Round 4 generalized this to all operators (round-3
+ADVICE: connected components' checkpoint blocks lingered for the session
+lifetime).
 """
 
 from __future__ import annotations

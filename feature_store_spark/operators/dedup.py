@@ -164,7 +164,7 @@ def lsh_candidate_pairs_with_stats(
     sides of the bucket self-join (and the hot-bucket rank/report), and
     without the persist the whole upstream shingle/md5 pipeline is
     evaluated once per consumer.  Release via ``release_caches()`` /
-    ``cache_scope()`` as with the sliced as-of cache."""
+    ``cache_scope()``."""
     if wide_signatures is not None:
         piv = wide_signatures
         def _sig_col(i: int):

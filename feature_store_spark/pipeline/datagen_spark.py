@@ -39,7 +39,7 @@ def synth_feature_events(
     ``skew_power`` > 1 skews entities toward low ids (hot entities), the
     salting/AQE stressor the north rule names.  ``hot_fraction`` makes
     entity 0 own that fraction of ALL rows outright — the degenerate
-    single-hot-key case the sliced as-of strategy exists for.
+    single-hot-key case, where one task holds half the as-of input.
     """
     span_s = span_days * 86400
     df = spark.range(n_rows)

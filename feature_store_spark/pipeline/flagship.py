@@ -1,5 +1,5 @@
 """The flagship image chain, defined once: decode → 1-day rolling window →
-30-minute sessions → sliced as-of join against the observations.
+30-minute sessions → union as-of join against the observations.
 
 ``bench.py`` times it, ``bench_extra.py`` and ``scripts/capture_plans.py``
 rebuild it, ``scripts/bench_job.py`` scales it across executors and the
@@ -32,17 +32,16 @@ def flagship_features(images: DataFrame) -> DataFrame:
 
 
 def flagship_frame(obs: DataFrame, images: DataFrame) -> DataFrame:
-    """Each observation joined to its image's latest features, over
-    1-day slices with the ``phash`` tiebreak."""
+    """Each observation joined to its image's latest features, with the
+    ``phash`` tiebreak."""
     return asof_join(
         obs, flagship_features(images),
-        feature_cols=FLAGSHIP_FEATURE_COLS,
-        tiebreak_cols=["phash"], strategy="sliced", slice_duration="1d")
+        feature_cols=FLAGSHIP_FEATURE_COLS, tiebreak_cols=["phash"])
 
 
-def skewed_asof(obs: DataFrame, events: DataFrame, strategy: str) -> DataFrame:
+def skewed_asof(obs: DataFrame, events: DataFrame) -> DataFrame:
     """The hot-entity as-of: ``events`` against ``obs`` by ``entity_id``."""
     return asof_join(
         obs, events, on="entity_id", obs_time="obs_time",
         feature_time="event_time", feature_cols=["fv1", "fv2"],
-        tiebreak_cols=["seq"], strategy=strategy, slice_duration="1d")
+        tiebreak_cols=["seq"])

@@ -746,11 +746,6 @@ def materialize(
     counts, skew, watermark), computed from two small per-batch
     aggregation jobs; ~3 driver actions per batch ≪ 1 per date.
 
-    The join is always the ``union`` as-of: the state layer already
-    reduces each entity's pre-batch history to one row, which is exactly
-    the carry ``sliced`` would recompute, and a hot entity's in-batch rows
-    span only the batch's own days.
-
     The feature/state tables default to hidden tables under the output
     table's directory; pass them explicitly to share one decoded feature
     store across multiple outputs.

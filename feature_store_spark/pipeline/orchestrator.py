@@ -18,10 +18,8 @@ Config keys (dict, or YAML loaded into one):
                     (:data:`NOT_RETRYABLE`) fail on the first attempt
   job_retry_sec     backoff seconds between attempts (default 0)
   num_date_eval     offline eval window: last N obs dates (default all)
-  asof_strategy     as-of strategy of the training retrieval: "union"
-                    (default) or "sliced" (opt-in for hot entities over
-                    full history); materialize always runs "union", its
-                    state layer already being the carry
+  asof_strategy     optional, accepts only "union" (the one as-of join);
+                    any other value fails at construction
   batch_dates       obs dates per Spark job in materialize (default 16)
   expire_keep_last  optional: expire all but the newest N snapshots of
                     the derived tables at the end of run_all (storage
@@ -45,8 +43,6 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 
 from feature_store_spark.io.tables import PartitionedTable
-from feature_store_spark.operators.asof import ASOF_STRATEGIES
-from feature_store_spark.operators.caches import cache_scope
 from feature_store_spark.pipeline.infer import OnlineStore, infer
 from feature_store_spark.pipeline.materialize import (
     CheckpointManifest,
@@ -143,11 +139,11 @@ class FeaturePipeline:
         self.out = config["output_path"]
         self.retries = int(config.get("job_retry", 3))
         self.backoff = float(config.get("job_retry_sec", 0))
-        self.asof_strategy = config.get("asof_strategy", "union")
-        if self.asof_strategy not in ASOF_STRATEGIES:
+        asof_strategy = config.get("asof_strategy", "union")
+        if asof_strategy != "union":
             raise ValueError(
-                f"asof_strategy {self.asof_strategy!r}: want one of "
-                f"{ASOF_STRATEGIES}"
+                f"asof_strategy {asof_strategy!r}: the key now accepts "
+                f"only 'union'"
             )
         self.batch_dates = int(config.get("batch_dates", 16))
         self.images_t = PartitionedTable(self.out, "images", "event_date")
@@ -222,17 +218,12 @@ class FeaturePipeline:
             sources = {
                 name: feats for name in self.registry.anchors
             }
-            # scope the sliced strategy's per-anchor persists to this
-            # stage: released right after the training frame is written,
-            # instead of accumulating for the session's lifetime
-            with cache_scope():
-                train = get_offline_features(
-                    obs, sources, self.registry, obs_time="obs_time",
-                    asof_strategy=self.asof_strategy,
-                )
-                train.write.mode("overwrite").parquet(
-                    os.path.join(self.out, "training_features.parquet")
-                )
+            train = get_offline_features(
+                obs, sources, self.registry, obs_time="obs_time"
+            )
+            train.write.mode("overwrite").parquet(
+                os.path.join(self.out, "training_features.parquet")
+            )
             return train
 
         return self._retry(_run, "training")

@@ -136,7 +136,6 @@ def get_offline_features(
     registry: FeatureRegistry,
     obs_key_map: dict[str, str] | None = None,
     obs_time: str = "obs_time",
-    asof_strategy: str = "union",
 ) -> DataFrame:
     """PIT-correct retrieval: for each anchor, attach its features to the
     observation spine — as-of join for event sources, broadcast left join
@@ -186,7 +185,6 @@ def get_offline_features(
             feature_cols=asof_cols,
             tiebreak_cols=anchor.tiebreak,
             lookback=None,
-            strategy=asof_strategy,
             feature_ts_col=ts_col,
         )
         # 2. Per-feature expiry: a latest feature is null once the joined

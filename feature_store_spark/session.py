@@ -19,8 +19,8 @@ _DEFAULTS: dict[str, str] = {
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
     # Let AQE coalesce/replan CACHED plans too (off by default): persisted
-    # operator intermediates (sliced as-of merge, CC's symmetrized edges,
-    # LSH bucket membership) otherwise keep the static
+    # operator intermediates (CC's symmetrized edges, LSH bucket
+    # membership) otherwise keep the static
     # spark.sql.shuffle.partitions count however small the data is, and
     # every consumer of the cache pays that task count per stage.  AQE
     # sizes the cached partitioning by observed bytes, so this adapts from

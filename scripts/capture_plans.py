@@ -52,14 +52,11 @@ def main() -> None:
         return flagship_frame(data("obs_150000.parquet"),
                               data("images_150000.parquet"))
 
-    def skew(strategy):
-        return skewed_asof(data("skew_obs_200000.parquet"),
-                           data("skew_events_2000000.parquet"), strategy)
-
     composites = {
         "image_feature_pipeline": image_feature_pipeline,
-        "asof_skew_union": lambda: skew("union"),
-        "asof_skew_sliced": lambda: skew("sliced"),
+        "asof_skew_union": lambda: skewed_asof(
+            data("skew_obs_200000.parquet"),
+            data("skew_events_2000000.parquet")),
     }
 
     skip_exec = {"image_pipeline", "resize_roundtrip"}  # they write sidecars

@@ -85,7 +85,7 @@ def main() -> int:
             failures += 1
             continue
         finally:
-            # operator-internal persists (sliced as-of, CC labels) are
+            # operator-internal persists (LSH buckets, CC labels) are
             # per-query; 51 queries in one session must not accumulate
             release_caches()
         if sql is None:

@@ -1,5 +1,6 @@
-"""As-of join: unit semantics + property equivalence of both strategies
-against the brute-force oracle (SURVEY.md §5 plan #2/#3)."""
+"""As-of join: unit semantics + property equivalence against the
+brute-force oracle (SURVEY.md §5 plan #2/#3).  The ``union``
+parametrization names the one as-of algorithm and keeps the test ids."""
 
 from __future__ import annotations
 
@@ -42,13 +43,12 @@ def simple(spark):
     return obs, feats
 
 
-@pytest.mark.parametrize("strategy", ["union", "sliced"])
+@pytest.mark.parametrize("strategy", ["union"])
 def test_asof_semantics(spark, simple, strategy):
     obs, feats = simple
     out = (
         asof_join(
             obs, feats, feature_cols=["v"], tiebreak_cols=["seq"],
-            strategy=strategy, slice_duration="30m",
         )
         .orderBy("image_id", "obs_time")
         .toPandas()
@@ -65,13 +65,13 @@ def test_asof_semantics(spark, simple, strategy):
     assert (ok["feature_ts"] <= ok["obs_time"]).all()
 
 
-@pytest.mark.parametrize("strategy", ["union", "sliced"])
+@pytest.mark.parametrize("strategy", ["union"])
 def test_asof_lookback(spark, simple, strategy):
     obs, feats = simple
     out = (
         asof_join(
             obs, feats, feature_cols=["v"], tiebreak_cols=["seq"],
-            lookback="25m", strategy=strategy, slice_duration="20m",
+            lookback="25m",
         )
         .orderBy("image_id", "obs_time")
         .toPandas()
@@ -80,7 +80,7 @@ def test_asof_lookback(spark, simple, strategy):
     assert np.isnan(out.loc[3, "v"])  # b @ 49: age 44m > 25m → expired
 
 
-@pytest.mark.parametrize("strategy", ["union", "sliced"])
+@pytest.mark.parametrize("strategy", ["union"])
 @pytest.mark.parametrize("seed", [0, 1, 2])
 def test_asof_property_vs_oracle(spark, strategy, seed):
     rng = np.random.default_rng(seed)
@@ -105,7 +105,7 @@ def test_asof_property_vs_oracle(spark, strategy, seed):
         asof_join(
             spark.createDataFrame(obs), spark.createDataFrame(feats),
             feature_cols=["v", "seq"], tiebreak_cols=["seq"],
-            lookback="12h", strategy=strategy, slice_duration="6h",
+            lookback="12h",
         )
         .orderBy("image_id", "obs_time")
         .toPandas()
@@ -121,68 +121,3 @@ def test_asof_property_vs_oracle(spark, strategy, seed):
     gs = got["seq"].fillna(-1).to_numpy(int)
     ws = want["seq"].fillna(-1).astype(int).to_numpy()
     assert (gs == ws).all()
-
-
-def test_strategies_identical_with_ties(spark):
-    rng = np.random.default_rng(9)
-    n = 400
-    feats = pd.DataFrame(
-        {
-            "image_id": [f"e{i}" for i in rng.integers(0, 5, n)],
-            "event_time": [_ts(int(m)) for m in rng.integers(0, 200, n)],  # many ties
-            "v": rng.normal(size=n),
-            "seq": np.arange(n),
-        }
-    )
-    obs = pd.DataFrame(
-        {
-            "image_id": [f"e{i}" for i in rng.integers(0, 5, 150)],
-            "obs_time": [_ts(int(m)) for m in rng.integers(0, 250, 150)],
-        }
-    )
-    kw = dict(feature_cols=["v", "seq"], tiebreak_cols=["seq"])
-    a = asof_join(spark.createDataFrame(obs), spark.createDataFrame(feats),
-                  strategy="union", **kw).orderBy("image_id", "obs_time", "seq").toPandas()
-    b = asof_join(spark.createDataFrame(obs), spark.createDataFrame(feats),
-                  strategy="sliced", slice_duration="45m", **kw
-                  ).orderBy("image_id", "obs_time", "seq").toPandas()
-    pd.testing.assert_frame_equal(a, b)
-
-
-def test_sliced_cache_scoping(spark, simple):
-    """Caches register to the innermost scope and are unpersisted on exit;
-    unscoped caches stay global until release_caches (round-2
-    ADVICE: scope per call site, don't over-release other callers')."""
-    from feature_store_spark.operators import caches as caches_mod
-    from feature_store_spark.operators.caches import (
-        cache_scope,
-        release_caches,
-    )
-
-    obs, feats = simple
-    release_caches()
-
-    def run_sliced(slice_duration="30m"):
-        # distinct slice_duration per call → distinct logical plans, as at
-        # the real call sites (Spark's CacheManager dedupes identical plans,
-        # which would alias the two scopes' cache entries)
-        out = asof_join(obs, feats, feature_cols=["v"], tiebreak_cols=["seq"],
-                        strategy="sliced", slice_duration=slice_duration)
-        out.count()
-        return out
-
-    with cache_scope() as outer:
-        run_sliced()
-        assert len(outer) == 1 and not caches_mod._GLOBAL_CACHES
-        cached = outer[0]
-        assert cached.storageLevel.useMemory  # persisted while in scope
-        with cache_scope() as inner:
-            run_sliced(slice_duration="15m")
-            assert len(inner) == 1 and len(outer) == 1  # no cross-register
-        assert not inner  # inner released on exit...
-        assert outer[0].storageLevel.useMemory  # ...outer untouched
-    assert not cached.storageLevel.useMemory  # released at outer exit
-
-    run_sliced()  # outside any scope → global list, explicit release
-    assert len(caches_mod._GLOBAL_CACHES) == 1
-    assert release_caches() == 1 and not caches_mod._GLOBAL_CACHES

@@ -71,6 +71,46 @@ def vectors(spark):
     return spark.createDataFrame(pdf)
 
 
+def test_lsh_bucket_cache_scoping(spark, boilerplate_docs):
+    """Caches register to the innermost scope and are unpersisted on exit;
+    unscoped caches stay global until release_caches (round-2
+    ADVICE: scope per call site, don't over-release other callers')."""
+    from feature_store_spark.operators import caches as caches_mod
+    from feature_store_spark.operators.caches import (
+        cache_scope,
+        release_caches,
+    )
+
+    sigs = minhash_signatures(boilerplate_docs, num_hashes=4)
+    release_caches()
+
+    def run_lsh(band_size=2, max_bucket_size=10):
+        # distinct band_size per call → distinct bucket plans, as at the
+        # real call sites (Spark's CacheManager dedupes identical plans,
+        # which would alias the two scopes' cache entries)
+        pairs, _ = lsh_candidate_pairs_with_stats(
+            sigs, num_hashes=4, band_size=band_size,
+            max_bucket_size=max_bucket_size)
+        pairs.count()
+        return pairs
+
+    with cache_scope() as outer:
+        run_lsh()
+        assert len(outer) == 1 and not caches_mod._GLOBAL_CACHES
+        cached = outer[0]
+        assert cached.storageLevel.useMemory  # persisted while in scope
+        with cache_scope() as inner:
+            run_lsh(band_size=1, max_bucket_size=5)
+            assert len(inner) == 1 and len(outer) == 1  # no cross-register
+        assert not inner  # inner released on exit...
+        assert outer[0].storageLevel.useMemory  # ...outer untouched
+    assert not cached.storageLevel.useMemory  # released at outer exit
+
+    run_lsh()  # outside any scope → global list, explicit release
+    assert len(caches_mod._GLOBAL_CACHES) == 1
+    assert release_caches() == 1 and not caches_mod._GLOBAL_CACHES
+
+
 def test_partial_topk_equals_full_shuffle(spark, vectors):
     """The map-side pre-reduce is exact: identical result to the plain
     full-shuffle window rank, at any input partitioning."""

@@ -174,17 +174,20 @@ def test_retries_are_recorded(tmp_path):
 
 
 def test_asof_strategy_checked_at_construction(tmp_path):
-    """The shipped example config builds a pipeline; a retired or
-    misspelt as-of strategy fails in the constructor, before any stage
-    (``spark=None`` proves no Spark call precedes the check)."""
+    """The shipped example config (``asof_strategy: union``) builds a
+    pipeline, and so does one without the key; any other value, retired
+    or misspelt, fails in the constructor, before any stage (``spark=None``
+    proves no Spark call precedes the check)."""
     import main as cli
 
     cfg = cli.load_config(os.path.join(REPO, "configs", "example_config.yaml"))
     cfg["output_path"] = str(tmp_path)
-    pipe = FeaturePipeline(cfg, spark=None)
-    assert pipe.asof_strategy in ("union", "sliced")
-    for bad in ("auto", "slcied"):
-        with pytest.raises(ValueError, match="union.*sliced"):
+    assert cfg["asof_strategy"] == "union"
+    FeaturePipeline(cfg, spark=None)
+    FeaturePipeline({k: v for k, v in cfg.items() if k != "asof_strategy"},
+                    spark=None)
+    for bad in ("sliced", "auto", "slcied"):
+        with pytest.raises(ValueError, match="accepts only 'union'"):
             FeaturePipeline({**cfg, "asof_strategy": bad}, spark=None)
 
 

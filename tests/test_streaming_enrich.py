@@ -59,7 +59,7 @@ def test_enrich_matches_asof_and_never_leaks(spark, state_pdf):
     # in-window rows match the offline as-of join over the same state
     want = (
         asof_join(obs, state, feature_cols=["phash", "mean_r"],
-                  tiebreak_cols=["phash"], strategy="union")
+                  tiebreak_cols=["phash"])
         .toPandas().set_index("obs_id").sort_index()
     )
     pd.testing.assert_frame_equal(got, want)
