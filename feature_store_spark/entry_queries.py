@@ -934,7 +934,7 @@ def q_image_pipeline(spark, sf):  # the full flagship, oracle-checked
     out = flagship_frame(obs, images.drop("truth_mean_r", "truth_std_r"))
     return out.select("image_id", "obs_id", "obs_time", "feature_ts",
                       "phash", F.round("mean_r", R).alias("mean_r"),
-                      F.col("roll_cnt").cast("long").alias("roll_cnt"),
+                      F.col("roll_cnt_1d").cast("long").alias("roll_cnt"),
                       "session_id")
 
 

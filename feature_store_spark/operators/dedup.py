@@ -430,7 +430,6 @@ def connected_components(
     id_a: str = "doc_id_a",
     id_b: str = "doc_id_b",
     max_iterations: int = 25,
-    on_nonconvergence: str = "star",
     edges_deduped: bool = False,
 ) -> DataFrame:
     """Connected components over an undirected edge list → one row per
@@ -443,10 +442,9 @@ def connected_components(
     ``graph diameter`` rounds.  Near-duplicate clusters (the intended
     input: LSH candidate pairs) are dense, so diameter is tiny (≲3).  If
     the diameter exceeds ``max_iterations`` (an adversarial chain of
-    pairwise-similar docs — a crawl of templated pages), the run FALLS
-    BACK to :func:`connected_components_star` (O(log² n) rounds at any
-    diameter) when ``on_nonconvergence="star"`` (default), or raises
-    with ``on_nonconvergence="raise"``.
+    pairwise-similar docs — a crawl of templated pages), the run warns
+    and FALLS BACK to :func:`connected_components_star` (O(log² n)
+    rounds at any diameter).
 
     Scale notes (round-4 rework of both round-3 blemishes): the
     ``__changed`` flag (label strictly decreased; labels are monotone
@@ -535,19 +533,13 @@ def connected_components(
             old.unpersist()
         else:
             handle.unpersist()  # non-convergence must not leak the blocks
-            if on_nonconvergence == "star":
-                warnings.warn(
-                    f"connected_components: no convergence in "
-                    f"{max_iterations} rounds (graph diameter exceeds "
-                    "it) — falling back to star-contraction",
-                    stacklevel=2,
-                )
-                return connected_components_star(edges, id_a, id_b)
-            raise RuntimeError(
-                f"connected_components did not converge in "
-                f"{max_iterations} rounds (graph diameter exceeds it) — "
-                "raise max_iterations or use connected_components_star"
+            warnings.warn(
+                f"connected_components: no convergence in "
+                f"{max_iterations} rounds (graph diameter exceeds "
+                "it) — falling back to star-contraction",
+                stacklevel=2,
             )
+            return connected_components_star(edges, id_a, id_b)
     finally:
         sym.unpersist()
     register_cache(handle)

@@ -1,5 +1,11 @@
-"""The flagship image chain, defined once: decode → 1-day rolling window →
-30-minute sessions → union as-of join against the observations.
+"""The flagship image chain: :func:`~feature_store_spark.pipeline.
+materialize.compute_features` (decode → 1-day rolling window → lag →
+30-minute sessions) → union as-of join against the observations.
+
+``compute_features`` is the one definition of the chain; the flagship
+adds only the as-of join.  Catalyst prunes the window columns the
+flagship does not select (``lag_phash``), so the chain costs the same
+sorts and exchanges here as a chain without them.
 
 ``bench.py`` times it, ``bench_extra.py`` and ``scripts/capture_plans.py``
 rebuild it, ``scripts/bench_job.py`` scales it across executors and the
@@ -9,33 +15,20 @@ own output columns; the chain itself is written out nowhere else.
 
 from __future__ import annotations
 
-import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
-from feature_store_spark.functions.images import with_image_features
 from feature_store_spark.operators.asof import asof_join
-from feature_store_spark.operators.windows import sessionize, with_rolling
+from feature_store_spark.pipeline.materialize import compute_features
 
 FLAGSHIP_FEATURE_COLS = ["phash", "mean_r", "mean_g", "mean_b", "std_r",
-                         "roll_cnt", "roll_mean_r", "session_id"]
-
-
-def flagship_features(images: DataFrame) -> DataFrame:
-    """Decoded image features plus the rolling and session columns."""
-    feats = with_image_features(images)
-    feats = with_rolling(
-        feats, "image_id", "event_time",
-        {"roll_cnt": F.count(F.lit(1)), "roll_mean_r": F.avg("mean_r")},
-        window="1d")
-    return sessionize(feats, "image_id", "event_time", gap="30m",
-                      tiebreak=["phash"])
+                         "roll_cnt_1d", "roll_mean_r_1d", "session_id"]
 
 
 def flagship_frame(obs: DataFrame, images: DataFrame) -> DataFrame:
     """Each observation joined to its image's latest features, with the
     ``phash`` tiebreak."""
     return asof_join(
-        obs, flagship_features(images),
+        obs, compute_features(images),
         feature_cols=FLAGSHIP_FEATURE_COLS, tiebreak_cols=["phash"])
 
 

@@ -72,7 +72,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from feature_store_spark.functions.images import with_image_features
 from feature_store_spark.io.jsonl import append_jsonl, read_jsonl
 from feature_store_spark.io.tables import PartitionedTable
-from feature_store_spark.operators.asof import asof_join, duration_to_us
+from feature_store_spark.operators.asof import asof_join
 from feature_store_spark.operators.caches import cache_scope, register_cache
 from feature_store_spark.operators.windows import (
     sessionize,
@@ -140,31 +140,39 @@ class LineageLog:
         return read_jsonl(self.path)
 
 
+def _rolling(df: DataFrame) -> DataFrame:
+    """The chain's rolling aggregates over ``ROLL_WINDOW`` per entity."""
+    return with_rolling(
+        df, "image_id", "event_time",
+        {"roll_cnt_1d": F.count(F.lit(1)), "roll_mean_r_1d": F.avg("mean_r")},
+        window=ROLL_WINDOW,
+    )
+
+
+def _lag_and_sessions(df: DataFrame) -> DataFrame:
+    """The chain's ``lag_phash`` and ``SESSION_GAP`` sessions per entity.
+    Both order by (event_time, phash): one window spec, so one sort."""
+    df = with_lag_lead(
+        df, "image_id", "event_time",
+        {"lag_phash": ("phash", -1)}, tiebreak=["phash"],
+    )
+    return sessionize(
+        df, "image_id", "event_time", gap=SESSION_GAP, tiebreak=["phash"]
+    )
+
+
 def compute_features(images: DataFrame) -> DataFrame:
-    """Batch (full-history) decode + window features — the reference
-    semantics the incremental path must equal (property: incremental
-    update over partitions == this over the concatenated history).
+    """Batch (full-history) decode + window features — the one definition
+    of the image chain.  The flagship (``pipeline/flagship.py``) is this
+    chain plus the as-of join, and the incremental span chain
+    (:func:`_chain_window_features`) runs the same operators; the property
+    incremental update over partitions == this over the concatenated
+    history pins the two together.
 
     Bytes are dropped inside ``with_image_features`` BEFORE any shuffle —
     windows and the as-of join move only the small numeric feature vector.
     """
-    feats = with_image_features(images)
-    feats = with_rolling(
-        feats,
-        "image_id",
-        "event_time",
-        {"roll_cnt_1d": F.count(F.lit(1)),
-         "roll_mean_r_1d": F.avg("mean_r")},
-        window=ROLL_WINDOW,
-    )
-    feats = with_lag_lead(
-        feats, "image_id", "event_time",
-        {"lag_phash": ("phash", -1)}, tiebreak=["phash"],
-    )
-    feats = sessionize(
-        feats, "image_id", "event_time", gap=SESSION_GAP, tiebreak=["phash"]
-    )
-    return feats
+    return _lag_and_sessions(_rolling(with_image_features(images)))
 
 
 def _chain_window_features(
@@ -174,97 +182,60 @@ def _chain_window_features(
     keep_cols: tuple[str, ...] = (),
 ) -> DataFrame:
     """Window features for a SPAN of already-DECODED history rows (one
-    partition or several consecutive ones), seeded by the trailing-window
-    context rows (pre-span decoded features) and the per-entity state
-    (latest row before the span).  No image bytes anywhere — re-running
-    the chain (backfill) moves only the small numeric feature vectors.
+    partition or several consecutive ones): :func:`compute_features`'
+    operators, seeded by the trailing-window context rows (pre-span
+    decoded features) and the per-entity state (latest row before the
+    span).  No image bytes anywhere — re-running the chain (backfill)
+    moves only the small numeric feature vectors.
 
-    Seeding only needs to happen at each entity's FIRST span row: inside
-    the span, ``lag``/session windows read the actual previous row, which
-    is exactly what per-partition chaining would have carried as state —
-    so one span call equals per-partition chaining equals
+    Rolling runs over context ∪ span rows.  Lag and sessions run over each
+    entity's state row ∪ its span rows, so the first span row reads the
+    state row as its predecessor; ``sessionize`` numbers sessions from the
+    state row (index 0), and the state's own ``session_id_idx`` is added
+    back.  One span call therefore equals per-partition chaining equals
     :func:`compute_features` restricted to the span (property-tested in
-    tests/test_pipeline_e2e.py via golden parity and the random-mutation
-    sequence test).
+    tests/test_pipeline_e2e.py via golden parity, the span-seam test and
+    the random-mutation sequence test).
 
     ``keep_cols`` are passed through to the output (e.g. the source
     partition tag for a batched partitioned write).
     """
-    feats = decoded
-
     # rolling over [t - window, t]: union the context rows (only the
     # columns the aggregates read), compute the range frame, keep new rows
-    tagged = feats.withColumn("__new", F.lit(1))
+    tagged = decoded.withColumn("__new", F.lit(1))
     if ctx is not None:
         ctx_rows = ctx.select(
             "image_id", "event_time", "mean_r"
         ).withColumn("__new", F.lit(0))
         tagged = ctx_rows.unionByName(tagged, allowMissingColumns=True)
-    rolled = with_rolling(
-        tagged, "image_id", "event_time",
-        {"roll_cnt_1d": F.count(F.lit(1)), "roll_mean_r_1d": F.avg("mean_r")},
-        window=ROLL_WINDOW,
-    )
-    cur = rolled.where(F.col("__new") == 1).drop("__new")
+    cur = _rolling(tagged).where(F.col("__new") == 1)
 
-    # lag + session: within-partition windows, seeded at each entity's
-    # first new row by the state (last event before this partition)
+    # lag + sessions over state row ∪ span rows
     if state is not None:
         seed = state.select(
-            "image_id",
-            F.col("event_time").alias("__st_ts"),
-            F.col("phash").alias("__st_phash"),
+            "image_id", "event_time", "phash",
             F.col("session_id_idx").alias("__st_idx"),
+            F.lit(0).alias("__new"),
         )
-    else:
-        seed = None
-    w = Window.partitionBy("image_id").orderBy(
-        F.col("event_time").asc(), F.col("phash").asc()
-    )
-    if seed is not None:
-        cur = cur.join(seed, on="image_id", how="left")
-    else:
-        cur = (
-            cur.withColumn("__st_ts", F.lit(None).cast("timestamp"))
-            .withColumn("__st_phash", F.lit(None).cast("long"))
-            .withColumn("__st_idx", F.lit(None).cast("long"))
-        )
-    cur = cur.withColumn("__rn", F.row_number().over(w))
-    prev_ts = F.when(F.col("__rn") == 1, F.col("__st_ts")).otherwise(
-        F.lag("event_time", 1).over(w)
-    )
-    gap_us = duration_to_us(SESSION_GAP)
-    brk = (
-        F.when(prev_ts.isNull(), F.lit(0))
-        .when(
-            F.unix_micros(F.col("event_time").cast("timestamp"))
-            - F.unix_micros(prev_ts.cast("timestamp"))
-            > F.lit(gap_us),
-            F.lit(1),
-        )
-        .otherwise(F.lit(0))
-    )
-    wsum = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    cur = (
-        cur.withColumn(
-            "lag_phash",
-            F.when(F.col("__rn") == 1, F.col("__st_phash")).otherwise(
-                F.lag("phash", 1).over(w)
-            ),
-        )
-        .withColumn("__brk", brk)
-        .withColumn(
-            "session_id_idx",
-            (F.coalesce(F.col("__st_idx"), F.lit(0))
-             + F.sum("__brk").over(wsum)).cast("long"),
-        )
-        .withColumn(
+        cur = seed.unionByName(cur, allowMissingColumns=True)
+    cur = _lag_and_sessions(cur)
+    if state is not None:
+        # running first over sessionize's own window spec: no extra sort
+        w = Window.partitionBy("image_id").orderBy(
+            F.col("event_time").asc(), F.col("phash").asc()
+        ).rowsBetween(Window.unboundedPreceding, Window.currentRow)
+        idx = (
+            F.coalesce(F.first("__st_idx", ignorenulls=True).over(w), F.lit(0))
+            + F.col("session_id_idx")
+        ).cast("long")
+        cur = cur.withColumn("session_id_idx", idx).withColumn(
             "session_id",
             F.concat_ws("#", F.col("image_id"),
                         F.col("session_id_idx").cast("string")),
         )
+    return cur.where(F.col("__new") == 1).select(
+        *[F.col(c) for c in (*STATE_COLS, *keep_cols)]
     )
-    return cur.select(*[F.col(c) for c in (*STATE_COLS, *keep_cols)])
 
 
 def _date_minus(part: str, days: int) -> str:
@@ -413,20 +384,19 @@ def update_feature_table(
     features_table: PartitionedTable,
     state_table: PartitionedTable,
     lineage: LineageLog | None = None,
-    decoded_table: PartitionedTable | None = None,
     state_snapshot_every: int = 10,
     batch_parts: int = 32,
-    sketch_table: PartitionedTable | None = None,
 ) -> list[str]:
     """Bring the decoded / feature / state tables up to date with the
     images table's current snapshot.
 
     Stage A (decode): each image partition whose OWN input dirs changed is
-    decoded into ``decoded_table`` in ONE batched commit — nothing
+    decoded into the decoded table (:func:`default_decoded_table`) in ONE
+    batched commit — nothing
     cascades, backfills re-decode exactly the changed partitions.  A
     sketch stage follows (:func:`update_sketch_table`): per-partition
-    mergeable summaries (HLL entities, KLL decode-stat quantiles) in
-    ``sketch_table``, content-addressed the same way, so corpus stats
+    mergeable summaries (HLL entities, KLL decode-stat quantiles) in the
+    sketch table (:func:`default_sketch_table`), content-addressed the same way, so corpus stats
     resolve from sketches alone (:func:`corpus_feature_stats`).
 
     Stage B (window chain): feature partitions (decoded cols + window
@@ -451,10 +421,9 @@ def update_feature_table(
     snap = images_table.current_snapshot()
     if snap is None:
         raise ValueError("images table has no committed snapshot")
-    if decoded_table is None:
-        decoded_table = default_decoded_table(
-            features_table, images_table.partition_col
-        )
+    decoded_table = default_decoded_table(
+        features_table, images_table.partition_col
+    )
     img_parts = sorted(snap.mapping)
     if not img_parts:  # committed-but-empty snapshot: nothing to do
         return []
@@ -506,11 +475,11 @@ def update_feature_table(
     # stats (content-addressed like stage B, so only changed partitions
     # re-sketch; corpus stats resolve from the sketch table without ever
     # re-scanning history — see corpus_feature_stats)
-    if sketch_table is None:
-        sketch_table = default_sketch_table(
-            features_table, images_table.partition_col
-        )
-    update_sketch_table(spark, decoded_table, sketch_table, dec_map)
+    update_sketch_table(
+        spark, decoded_table,
+        default_sketch_table(features_table, images_table.partition_col),
+        dec_map,
+    )
 
     # -- stage B: window chain forward from the first invalid partition --
     f_info = (

@@ -9,7 +9,8 @@ Inputs are generated once into <data_root>, deterministic and
 content-addressed by (seed, row id), so both cluster sizes read the same
 rows.  ``passes=0`` only generates them.
 
-* ``image``: the flagship chain (``pipeline/flagship.py``).  After a warm
+* ``image``: the flagship (``pipeline/flagship.py``: the
+  ``compute_features`` chain plus the union as-of).  After a warm
   pass of the full chain on a deterministic ~8% subset (python-worker
   spawn, codegen for every stage, shuffle buffer pools), it times the
   DECODE stage alone and the FULL chain, so the report can split decode

@@ -1,16 +1,19 @@
 """Capture .explain("formatted") for every registry query + the bench
-composites, into plans/<tag>/<query>.txt — the round-6 optimization
-evidence trail (judge checks plan claims against these files).
+composites, into plans/<tag>/<query>.txt — the evidence trail for plan
+claims.
 
 Run:  python scripts/capture_plans.py <tag> [query ...]
 Uses the SAME session shape as bench.py (local[$SPARK_GRAFT_CPUS],
-shuffle=2x cores, maxPartitionBytes=1m) so plans match what the driver's
-bench executes.
+shuffle=2x cores, maxPartitionBytes=1m) so plans match what bench.py
+executes.  Plans are written normalised (:func:`normalise`): expression
+ids, plan ids and the checkout path become placeholders, so the plans of
+two checkouts compare with ``diff -r plans/<a> plans/<b>``.
 """
 
 from __future__ import annotations
 
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -18,6 +21,15 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def normalise(text: str, repo: str = REPO) -> str:
+    """``text`` with what differs between runs and checkouts of one plan
+    replaced: ``#<id>`` for expression ids, ``plan_id=<n>`` for plan ids
+    and ``<repo>`` for the checkout path."""
+    text = text.replace(repo, "<repo>")
+    text = re.sub(r"#\d+", "#<id>", text)
+    return re.sub(r"plan_id=\d+", "plan_id=<n>", text)
 
 
 def explain_str(df) -> str:
@@ -77,7 +89,7 @@ def main() -> None:
             text = f"ERROR building/explaining {name}: {e!r}"
         path = os.path.join(out_dir, f"{name}.txt")
         with open(path, "w") as f:
-            f.write(text)
+            f.write(normalise(text))
         print("wrote", path)
     from feature_store_spark.operators.caches import release_caches
     release_caches()

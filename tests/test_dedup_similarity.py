@@ -346,8 +346,7 @@ def test_star_contraction_high_diameter_path(spark):
     """Round-5 (round-4 judge #5): a path graph of diameter 79 — where
     min-label propagation with max_iterations=10 cannot converge —
     (a) converges via connected_components_star in O(log²) rounds, and
-    (b) connected_components falls back to it automatically (default),
-    while on_nonconvergence='raise' preserves the old error."""
+    (b) connected_components falls back to it automatically."""
     from feature_store_spark.operators.caches import release_caches
     from feature_store_spark.operators.dedup import (
         connected_components,
@@ -373,10 +372,6 @@ def test_star_contraction_high_diameter_path(spark):
     got = {r["node"]: r["component"] for r in out.collect()}
     assert got == want
     release_caches()
-
-    with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(e, max_iterations=10,
-                             on_nonconvergence="raise")
 
 
 def test_star_contraction_vs_propagation_random_graph(spark):

@@ -714,3 +714,79 @@ def test_random_mutation_sequence_equals_batch(spark, tmp_path):
         ), step
         # stale partitions beyond the feature table's mapping never linger
         assert set(feats_t.partitions()) == set(current)
+
+
+def test_span_seam_equals_batch(spark, tmp_path):
+    """One update commits day 1 and a later one commits day 2.  At the
+    seam between them the span chain equals compute_features over both
+    days: an event exactly SESSION_GAP after the entity's last day-1 event
+    stays in its session, one 1 µs later opens a new one, event_time ties
+    break by phash (at the end of day 1 and inside day 2), and an entity
+    first seen on day 2 numbers its sessions from 0."""
+    from feature_store_spark.operators.asof import duration_to_us
+    from feature_store_spark.pipeline.materialize import (
+        SESSION_GAP,
+        update_feature_table,
+    )
+
+    gap = pd.Timedelta(microseconds=duration_to_us(SESSION_GAP))
+    us = pd.Timedelta(microseconds=1)
+    d1, d2 = pd.Timestamp("2024-03-01"), pd.Timestamp("2024-03-02")
+    a_last = d1 + pd.Timedelta(hours=23, minutes=45)
+    b_last = d1 + pd.Timedelta(hours=23, minutes=50)
+    events = [
+        ("img_a", d1 + pd.Timedelta(hours=1)),
+        ("img_a", d1 + pd.Timedelta(hours=5)),
+        ("img_a", a_last),                   # tie at the end of day 1
+        ("img_a", a_last),
+        ("img_a", a_last + gap),             # exactly the gap: same session
+        ("img_a", d2 + pd.Timedelta(hours=3)),
+        ("img_b", d1 + pd.Timedelta(hours=10)),
+        ("img_b", b_last),
+        ("img_b", b_last + gap + us),        # 1 µs past the gap: new session
+        ("img_c", d2 + pd.Timedelta(hours=5)),  # first seen on day 2, tie
+        ("img_c", d2 + pd.Timedelta(hours=5)),
+        ("img_c", d2 + pd.Timedelta(hours=5, minutes=10)),
+    ]
+    img = generate_images(n_rows=len(events), n_entities=1, seed=31).assign(
+        image_id=[e for e, _ in events],
+        event_time=pd.to_datetime([t for _, t in events]),
+    )
+    img["event_date"] = img["event_time"].dt.strftime("%Y-%m-%d")
+    days = sorted(img["event_date"].unique())
+    assert days == ["2024-03-01", "2024-03-02"]
+
+    base = str(tmp_path)
+    img_t = PartitionedTable(base, "images", "event_date")
+    feats_t = PartitionedTable(base, "features", "event_date")
+    state_t = PartitionedTable(base, "state", "event_date")
+    for day in days:
+        img_t.write(spark.createDataFrame(img[img.event_date == day]),
+                    mode="overwrite_partitions")
+        assert update_feature_table(spark, img_t, feats_t, state_t) == [day]
+
+    key = ["image_id", "event_time", "phash"]
+    cols = [*key, "session_id", "session_id_idx", "lag_phash", "roll_cnt_1d"]
+    got = (
+        feats_t.read(spark).toPandas()[cols]
+        .sort_values(key, kind="stable").reset_index(drop=True)
+    )
+    want = (
+        compute_features(
+            spark.createDataFrame(img.drop(columns=["event_date"])))
+        .toPandas()[cols]
+        .sort_values(key, kind="stable").reset_index(drop=True)
+    )
+    pd.testing.assert_frame_equal(got, want)
+
+    # the boundaries themselves, so a shared mistake cannot pass
+    idx = got.groupby("image_id")["session_id_idx"].apply(list).to_dict()
+    assert idx == {"img_a": [0, 1, 2, 2, 2, 3], "img_b": [0, 1, 2],
+                   "img_c": [0, 0, 0]}
+    a = got[got.image_id == "img_a"].reset_index(drop=True)
+    assert a.loc[2, "phash"] < a.loc[3, "phash"]  # the tie is real
+    assert a.loc[4, "lag_phash"] == a.loc[3, "phash"]  # larger phash last
+    assert a.loc[4, "roll_cnt_1d"] == 5  # day-1 context counted
+    c = got[got.image_id == "img_c"].reset_index(drop=True)
+    assert pd.isna(c.loc[0, "lag_phash"])
+    assert c.loc[1, "lag_phash"] == c.loc[0, "phash"]
