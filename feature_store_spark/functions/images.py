@@ -316,15 +316,6 @@ def with_resized_images(df, out_w: int, out_h: int, fmt: str = "png",
     )
 
 
-@F.pandas_udf(T.LongType())
-def phash_udf(data: pd.Series) -> pd.Series:
-    """bytes → 64-bit perceptual hash."""
-    return pd.Series(
-        [phash64(decode_image(bytes(b))) if b is not None else None for b in data],
-        dtype="Int64",
-    )
-
-
 def with_image_features(df, bytes_col: str = "bytes", out_col: str = "img",
                         on_error: str = "fail"):
     """Attach the decoded feature struct and DROP the binary payload.

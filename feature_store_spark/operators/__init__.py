@@ -8,11 +8,7 @@ from feature_store_spark.operators.dedup import (
     ngram_jaccard,
     simhash,
 )
-from feature_store_spark.operators.grouped import (
-    exact_quantiles,
-    grouped_apply,
-    zscore_normalize,
-)
+from feature_store_spark.operators.grouped import exact_quantiles, grouped_apply
 from feature_store_spark.operators.similarity import (
     ann_lsh_topk,
     cosine_topk,
@@ -29,7 +25,7 @@ __all__ = [
     "asof_join", "duration_to_us",
     "exact_fingerprints", "minhash_signatures", "lsh_candidate_pairs",
     "simhash", "ngram_jaccard",
-    "grouped_apply", "zscore_normalize", "exact_quantiles",
+    "grouped_apply", "exact_quantiles",
     "cosine_topk", "ann_lsh_topk",
     "dedup_latest", "rank_bucket", "sessionize", "with_lag_lead",
     "with_rolling",

@@ -29,32 +29,6 @@ def grouped_apply(
     return df.groupBy(*keys).applyInPandas(fn, schema=schema)
 
 
-def zscore_normalize(
-    df: DataFrame,
-    entity: str,
-    value_col: str,
-    out_col: str = "zscore",
-) -> DataFrame:
-    """Per-entity z-score — a reference example of a grouped custom op.
-    (This particular op IS window-expressible; it exists as the documented
-    template for ops that aren't, e.g. per-entity exact quantiles or
-    iterative state machines.)"""
-    out_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
-    ) + f", {out_col} double"
-
-    def _norm(pdf: pd.DataFrame) -> pd.DataFrame:
-        std = pdf[value_col].std(ddof=0)
-        mean = pdf[value_col].mean()
-        pdf = pdf.copy()
-        pdf[out_col] = 0.0 if (std == 0 or pd.isna(std)) else (
-            (pdf[value_col] - mean) / std
-        )
-        return pdf
-
-    return grouped_apply(df, [entity], _norm, out_schema)
-
-
 def grouped_topk(
     df: DataFrame,
     key: str,
@@ -125,7 +99,7 @@ def grouped_topk(
 
 def quantile_col_name(q: float) -> str:
     """0.5 → ``q50``, 0.995 → ``q99_5`` — float-exact naming shared by
-    the exact and sketch quantile operators (``int(q*100)`` truncated
+    ``exact_quantiles`` and ``corpus_feature_stats`` (``int(q*100)`` truncated
     0.29 to ``q28`` and collided 0.99/0.995 — round-4 review)."""
     name = "q" + ("%g" % (q * 100)).replace(".", "_")
     return name

@@ -27,26 +27,15 @@ def dot_expr(a: str, b: str):
     )
 
 
-def cosine_expr(a: str, b: str):
-    """Cosine similarity; NULL (not an ANSI divide-by-zero error) for a
-    zero-norm side — callers filter non-finite scores before ranking.
-    try_divide is nested, not collapsed to one divide by (‖a‖·‖b‖), so the
-    rounding matches the oracles' ``dot / norm / norm`` exactly."""
-    return F.try_divide(
-        F.try_divide(dot_expr(a, b), F.sqrt(dot_expr(a, a))),
-        F.sqrt(dot_expr(b, b)),
-    )
-
-
 def _cos_from_norms(q_vec: str, vec: str, q_norm: str, norm: str):
-    """Cosine from a per-pair dot plus PRECOMPUTED per-row norms — the
-    round-6 form of :func:`cosine_expr` for join-shaped scoring: each
-    side's ``sqrt(dot(v, v))`` is evaluated once per ROW below the join
-    (the projection streams/builds before the probe loop) instead of once
-    per candidate PAIR, cutting the pairwise vector math 3×.  The norm
-    columns hold the *identical* expression ``sqrt(dot_expr(v, v))`` and
-    the division order is unchanged, so results are bit-identical to
-    :func:`cosine_expr` (which the oracles mirror)."""
+    """Cosine from a per-pair dot plus PRECOMPUTED per-row norms, for
+    join-shaped scoring: each side's ``sqrt(dot(v, v))`` is evaluated once
+    per ROW below the join (the projection streams/builds before the probe
+    loop) instead of once per candidate PAIR, cutting the pairwise vector
+    math 3×.  NULL (not an ANSI divide-by-zero error) for a zero-norm side
+    — callers filter non-finite scores before ranking.  try_divide is
+    nested, not collapsed to one divide by (‖a‖·‖b‖), so the rounding
+    matches the oracles' ``dot / norm / norm`` exactly."""
     return F.try_divide(
         F.try_divide(dot_expr(q_vec, vec), F.col(q_norm)), F.col(norm)
     )
@@ -149,7 +138,7 @@ def cosine_topk(
     if pre_reduce:
         scored = _partial_topk(scored, k, q_id_col)
     else:
-        # NULL must be dropped explicitly: cosine_expr returns NULL (not
+        # NULL must be dropped explicitly: _cos_from_norms returns NULL (not
         # NaN) for a zero-norm side via try_divide, and isnan(NULL) is
         # false — keeping NULLs here would diverge from the Arrow
         # pre-reduce path when a query has < k finite neighbors

@@ -116,14 +116,3 @@ def oracle_sessionize(
             prev_t = t
     out["session_idx"] = idxs
     return out
-
-
-def oracle_lag_lead(
-    df: pd.DataFrame, entity: str, ts: str, col: str,
-    tiebreak: list[str] | None = None,
-) -> pd.DataFrame:
-    out = df.sort_values([entity, ts, *(tiebreak or [])], kind="stable").copy()
-    g = out.groupby(entity, sort=False)[col]
-    out["lag_1"] = g.shift(1)
-    out["lead_1"] = g.shift(-1)
-    return out

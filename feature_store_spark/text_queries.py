@@ -33,11 +33,7 @@ def _embs(spark, sf) -> DataFrame:
     evaluated map-side in the scan stage (guide §2.5 input skew)."""
     return fan_out(t(spark, sf, "embeddings"))
 
-# deterministic 60-bit hash shared by both dialects
-def _spark_h60(col):
-    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
-
-
+# the DuckDB twin of operators.dedup.h60 (deterministic 60-bit hash)
 def _sql_h60(expr: str) -> str:
     return f"(('0x' || substr(md5({expr}), 1, 15))::BIGINT)"
 
@@ -109,17 +105,9 @@ FROM documents
 
 
 def q_fingerprint(spark, sf):  # document fingerprint (normalized md5) + exact dedup
-    d = t(spark, sf, "documents")
-    norm = F.regexp_replace(F.lower(F.trim(F.col("text"))), "\\s+", " ")
-    fp = F.md5(norm)
-    return (
-        d.select("doc_id", fp.alias("fingerprint"))
-        .groupBy("fingerprint")
-        .agg(
-            F.count(F.lit(1)).alias("dup_count"),
-            F.min("doc_id").alias("canonical_doc_id"),
-        )
-    )
+    from feature_store_spark.operators.dedup import exact_fingerprints
+
+    return exact_fingerprints(t(spark, sf, "documents"))
 
 
 SQL_FINGERPRINT = """

@@ -1,123 +1,10 @@
-"""Mergeable sketches: tolerance vs exact, and the mergeability property
-(sketch-of-union == merge-of-per-partition-sketches) that makes them the
-re-scan-free 100 TB path."""
+"""The materialize pipeline's per-partition sketch table: corpus stats
+resolved from it after incremental updates equal the one-shot batch
+build's, and sit within sketch tolerance of the exact answer."""
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
-import pyspark.sql.functions as F
-import pytest
-
-from feature_store_spark.operators.sketches import (
-    approx_quantiles,
-    distinct_sketch,
-    merge_distinct_sketches,
-)
-
-
-@pytest.fixture(scope="module")
-def events(spark):
-    rng = np.random.default_rng(5)
-    n = 40_000
-    return spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "day": rng.integers(0, 10, n),
-                "event_type": rng.choice(["a", "b", "c"], n),
-                "user_id": rng.integers(0, 3_000, n),
-                "value": rng.exponential(10.0, n),
-            }
-        )
-    )
-
-
-def test_hll_estimate_within_error_bound(spark, events):
-    exact = {
-        r["event_type"]: r["n"]
-        for r in events.groupBy("event_type")
-        .agg(F.countDistinct("user_id").alias("n")).collect()
-    }
-    sk = distinct_sketch(events, ["event_type", "day"], "user_id")
-    est = {
-        r["event_type"]: r["approx_distinct"]
-        for r in merge_distinct_sketches(sk, ["event_type"]).collect()
-    }
-    assert est.keys() == exact.keys()
-    for k in exact:  # lgk=12 → ~1.6% RSE; 5% is a ~3σ bound
-        assert abs(est[k] - exact[k]) / exact[k] < 0.05, (k, est[k], exact[k])
-
-
-def test_hll_merge_equals_direct_sketch(spark, events):
-    """Union is associative: merging per-day sketches estimates exactly
-    what one direct sketch over all days estimates."""
-    direct = {
-        r["event_type"]: r["approx_distinct"]
-        for r in merge_distinct_sketches(
-            distinct_sketch(events, ["event_type"], "user_id"),
-            ["event_type"],
-        ).collect()
-    }
-    merged = {
-        r["event_type"]: r["approx_distinct"]
-        for r in merge_distinct_sketches(
-            distinct_sketch(events, ["event_type", "day"], "user_id"),
-            ["event_type"],
-        ).collect()
-    }
-    assert direct == merged
-
-
-def test_approx_quantiles_vs_exact(spark, events):
-    """GK with rank error 1/accuracy: the approx q-quantile's RANK must
-    be within n/accuracy of the exact rank — checked via the exact
-    sorted values, per key."""
-    got = approx_quantiles(
-        events, ["event_type"], "value", quantiles=(0.5, 0.9),
-        accuracy=1_000,
-    ).collect()
-    pdf = events.toPandas()
-    for r in got:
-        vals = np.sort(pdf[pdf.event_type == r["event_type"]]["value"].to_numpy())
-        n = len(vals)
-        assert r["n"] == n
-        for q, col in ((0.5, "q50"), (0.9, "q90")):
-            rank = np.searchsorted(vals, r[col], side="right")
-            assert abs(rank - q * n) <= n / 1_000 + 1, (r["event_type"], col)
-
-
-def test_kll_sketch_merge_matches_direct(spark, events):
-    """KLL quantile sketches: merge-of-per-day-sketches estimates match
-    the single direct sketch within rank tolerance, and both sit within
-    the sketch's rank error of the exact quantiles."""
-    from feature_store_spark.operators.sketches import (
-        kll_value_sketch,
-        merge_kll_sketches,
-    )
-
-    direct = {
-        r["event_type"]: r
-        for r in merge_kll_sketches(
-            kll_value_sketch(events, ["event_type"], "value"),
-            ["event_type"], quantiles=(0.5, 0.9),
-        ).collect()
-    }
-    merged = {
-        r["event_type"]: r
-        for r in merge_kll_sketches(
-            kll_value_sketch(events, ["event_type", "day"], "value"),
-            ["event_type"], quantiles=(0.5, 0.9),
-        ).collect()
-    }
-    pdf = events.toPandas()
-    for et, row in direct.items():
-        vals = np.sort(pdf[pdf.event_type == et]["value"].to_numpy())
-        n = len(vals)
-        for q, col in ((0.5, "q50"), (0.9, "q90")):
-            for est in (row[col], merged[et][col]):
-                rank = np.searchsorted(vals, est, side="right")
-                # k=200 → normalized rank error ~1.65%; allow 3%
-                assert abs(rank - q * n) <= 0.03 * n + 1, (et, col)
 
 
 def test_pipeline_sketch_table_incremental_equals_batch(spark, tmp_path):
@@ -131,6 +18,7 @@ def test_pipeline_sketch_table_incremental_equals_batch(spark, tmp_path):
     from feature_store_spark.pipeline.datagen import generate_images
     from feature_store_spark.pipeline.materialize import (
         corpus_feature_stats,
+        default_decoded_table,
         default_sketch_table,
         feature_lineage_for,
         rows_decoded_total,
@@ -174,15 +62,26 @@ def test_pipeline_sketch_table_incremental_equals_batch(spark, tmp_path):
     a = corpus_feature_stats(spark, sk_inc).first().asDict()
     b = corpus_feature_stats(spark, sk_bat).first().asDict()
     assert a["rows"] == b["rows"] == len(img_pdf)
+    # HLL union is associative and both builds sketch the same rows per
+    # partition, so the merged estimates are EQUAL, not just close
+    assert a["approx_distinct_entities"] == b["approx_distinct_entities"]
     exact_distinct = img_pdf["image_id"].nunique()
-    for d in (a, b):
-        assert abs(d["approx_distinct_entities"] - exact_distinct) \
-            <= 0.05 * exact_distinct + 1
+    assert abs(a["approx_distinct_entities"] - exact_distinct) \
+        <= 0.05 * exact_distinct + 1
     # decode happened: stats come from real decoded pixel values, and
     # both builds' quantiles sit within KLL rank tolerance of each other
     for col in ("mean_r_q50", "mean_r_q90", "std_r_q50"):
         assert a[col] > 0
         assert abs(a[col] - b[col]) <= 0.06 * max(abs(b[col]), 1.0)
+    # and of the exact quantiles of the decoded table: k=200 KLL has a
+    # normalized rank error of ~1.65%, so allow 3% of n
+    decoded = default_decoded_table(feats_bat, "event_date").read(spark)
+    vals = np.sort(decoded.select("mean_r").toPandas()["mean_r"].to_numpy())
+    n = len(vals)
+    for d in (a, b):
+        for q, col in ((0.5, "mean_r_q50"), (0.9, "mean_r_q90")):
+            rank = np.searchsorted(vals, d[col], side="right")
+            assert abs(rank - q * n) <= 0.03 * n + 1, (col, rank, n)
 
     # a third update with nothing new re-sketches nothing
     img_t = PartitionedTable(str(tmp_path / "inc"), "images", "event_date")
