@@ -4,8 +4,8 @@ pandas/Arrow UDFs").
 
 Use ONLY when window/agg built-ins genuinely can't express the op: each
 group is materialized as one pandas DataFrame on an executor, so the
-entity with the most rows bounds memory — pair with time-slicing (as the
-as-of join does) when entities are hot.
+entity with the most rows bounds memory.  When entities are hot, group by
+a finer key (e.g. entity plus time bucket) whenever the op allows it.
 """
 
 from __future__ import annotations

@@ -1,7 +1,10 @@
 """Point-in-time feature materialization with per-partition lineage and
 checkpoint/resume (north rule: "resumable from Iceberg-snapshot checkpoints,
-per-partition lineage records — input snapshot id, row counts, skew metrics,
-watermark").
+per-partition lineage records — input snapshot id, row counts,
+watermark").  The lineage comes from bookkeeping the tables already keep:
+obs row counts from the obs snapshot (parquet footers), output row counts
+from the write's footers, and the watermark from the per-partition
+``max_event_time`` each state commit records — no Spark job of its own.
 
 Three-level incremental design (round-2 reworked the O(P×H) read loop;
 round 3 split decode from the window chain and made state delta-based —
@@ -67,13 +70,12 @@ import json
 import os
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 
 from feature_store_spark.functions.images import with_image_features
 from feature_store_spark.io.jsonl import append_jsonl, read_jsonl
 from feature_store_spark.io.tables import PartitionedTable
 from feature_store_spark.operators.asof import asof_join
-from feature_store_spark.operators.caches import cache_scope, register_cache
 from feature_store_spark.operators.windows import (
     sessionize,
     with_lag_lead,
@@ -412,7 +414,11 @@ def update_feature_table(
     position, so the cadence is stable under backfills; a snapshot at P
     merges the pre-span state with the span's written rows ≤ P).
     Features are written before state; validity requires both, so a
-    crash between the two commits recomputes the span.
+    crash between the two commits recomputes the span.  One
+    ``DataFrame.observe`` on the features write takes each span
+    partition's max ``event_time`` (no extra job); the state commit
+    records it as ``max_event_time``, the source of ``materialize``'s
+    watermark, and a state partition without it counts as stale.
 
     Returns the list of partitions whose window chain was (re)computed.
     """
@@ -496,6 +502,7 @@ def update_feature_table(
         if (
             f_info.get(p, {}).get("decoded_dirs") != key
             or s_info.get(p, {}).get("decoded_dirs") != key
+            or "max_event_time" not in s_info.get(p, {})
         ):
             todo_from = p
             break
@@ -537,8 +544,12 @@ def update_feature_table(
             }
             for p in span
         }
+        max_ts = Observation()
         features_table.write(
-            feats.withColumnRenamed("__src_part", fcol),
+            feats.withColumnRenamed("__src_part", fcol).observe(max_ts, *[
+                F.max(F.when(F.col(fcol) == p, F.col("event_time"))).alias(p)
+                for p in span
+            ]),
             mode="overwrite_partitions",
             meta={"input_snapshot": snap.snapshot_id},
             partition_meta=pmeta,
@@ -591,12 +602,17 @@ def update_feature_table(
         state_df = state_frames[0]
         for f in state_frames[1:]:
             state_df = state_df.unionByName(f)
+        max_event_time = {
+            p: None if t is None else str(t) for p, t in max_ts.get.items()
+        }
         state_table.write(
             state_df,
             mode="overwrite_partitions",
             meta={"input_snapshot": snap.snapshot_id},
             partition_meta={
-                p: {**pmeta[p], "state_kind": kinds[p]} for p in span
+                p: {**pmeta[p], "state_kind": kinds[p],
+                    "max_event_time": max_event_time[p]}
+                for p in span
             },
         )
         if lineage is not None:
@@ -711,9 +727,11 @@ def materialize(
     to its own past, every pre-D1 event that could win is dominated by
     its entity's state row, and events in [D1..Dn] are joined exactly —
     so the result equals the per-date construction (pinned by
-    test_batched_equals_per_date).  Lineage stays PER PARTITION (row
-    counts, skew, watermark), computed from two small per-batch
-    aggregation jobs; ~3 driver actions per batch ≪ 1 per date.
+    test_batched_equals_per_date).  The write is the batch's one action.
+    Lineage stays PER PARTITION and costs no job: ``rows_obs`` from the
+    obs snapshot's counts, ``rows_out`` from the write's footers, and
+    ``watermark`` = the max ``max_event_time`` recorded by the state
+    commits of partitions ≤ D (max event_time over features ≤ D).
 
     The feature/state tables default to hidden tables under the output
     table's directory; pass them explicitly to share one decoded feature
@@ -738,8 +756,14 @@ def materialize(
         features_table.partitions()
         if features_table.current_snapshot() else []
     )
+    s_info = (
+        state_table.partition_info()
+        if state_table.current_snapshot() else {}
+    )
 
-    obs_parts = obs_table.partitions()
+    obs_snap = obs_table.current_snapshot()
+    obs_counts = obs_snap.partitions if obs_snap else {}
+    obs_parts = sorted(obs_counts)
     keys = materialize_keys(obs_table, features_table, state_table, lookback)
     if dates is None:
         done = checkpoint.done_partitions(keys)
@@ -747,7 +771,6 @@ def materialize(
     else:
         todo = [p for p in obs_parts if p in set(dates)]
 
-    obs_pcol = obs_table.partition_col
     processed = []
     for batch in _chunks(todo, max(1, batch_dates)):
         d1, dn = batch[0], batch[-1]
@@ -757,20 +780,17 @@ def materialize(
         # Every older event that could win the as-of is dominated by its
         # entity's state row; in-batch rows resolve exactly (leakage
         # guard inside the join confines each obs row to its own past).
-        # __feat_part tags rows with their feature partition ("" = the
-        # pre-batch state) so per-date watermarks fall out of one small
-        # aggregate + a driver-side prefix max.
         frames = []
         carry_part = max((p for p in feat_parts if p < d1), default=None)
         if carry_part is not None:
             carry = read_state_asof(spark, state_table, upto=carry_part)
             if carry is not None:
-                frames.append(carry.withColumn("__feat_part", F.lit("")))
+                frames.append(carry)
         day_parts = [p for p in feat_parts if d1 <= p <= dn]
         if day_parts:
             frames.append(
                 features_table.read(spark, partitions=day_parts)
-                .withColumnRenamed(features_table.partition_col, "__feat_part")
+                .drop(features_table.partition_col)
             )
         if frames:
             feats = frames[0]
@@ -779,78 +799,38 @@ def materialize(
         elif feat_parts:
             feats = features_table.read(
                 spark, partitions=[feat_parts[0]]
-            ).drop(features_table.partition_col).where(F.lit(False)).withColumn(
-                "__feat_part", F.lit("")
-            )
+            ).drop(features_table.partition_col).where(F.lit(False))
         else:
-            feats = spark.createDataFrame([], _EMPTY_FEATURES_DDL).withColumn(
-                "__feat_part", F.lit("")
-            )
+            feats = spark.createDataFrame([], _EMPTY_FEATURES_DDL)
 
-        with cache_scope():
-            # two consumers per batch (as-of and watermark jobs) — persist
-            # the assembled frame once instead of re-running the
-            # state-resolution dedup window per consumer; registered to
-            # the scope, released after the batch commits
-            feats = feats.persist()
-            register_cache(feats)
-            result = asof_join(
-                obs,
-                feats.drop("__feat_part"),
-                on="image_id",
-                obs_time="obs_time",
-                feature_time="event_time",
-                feature_cols=FEATURE_COLS,
-                tiebreak_cols=["phash", "caption"],
-                lookback=lookback,
-            )
-
-            # lineage inputs for the WHOLE batch: one per-date row-count +
-            # skew job, one per-feature-partition watermark job
-            stats_rows = (
-                obs.groupBy(obs_pcol, "image_id").count()
-                .groupBy(obs_pcol)
-                .agg(
-                    F.sum("count").alias("n"),
-                    F.max("count").alias("mx"),
-                    F.avg("count").alias("mean"),
-                )
-                .collect()
-            )
-            stats = {r[obs_pcol]: r for r in stats_rows}
-            wm_rows = (
-                feats.groupBy("__feat_part")
-                .agg(F.max("event_time").alias("wm"))
-                .collect()
-            )
-            out_snap = out_table.write(result, mode="overwrite_partitions")
-
-        # watermark@D = max event_time over (state ∪ features ≤ D):
-        # prefix max over the per-partition maxima, "" (state) first
-        wm_sorted = sorted(
-            (r["__feat_part"], r["wm"]) for r in wm_rows if r["wm"] is not None
+        result = asof_join(
+            obs,
+            feats,
+            on="image_id",
+            obs_time="obs_time",
+            feature_time="event_time",
+            feature_cols=FEATURE_COLS,
+            tiebreak_cols=["phash", "caption"],
+            lookback=lookback,
         )
-        records = []
-        for part in batch:
-            srow = stats.get(part)
-            wms = [wm for p, wm in wm_sorted if p == "" or p <= part]
-            watermark = max(wms) if wms else None
-            records.append(
-                {
-                    "partition": part,
-                    "input_snapshot": snap.snapshot_id,
-                    "rows_obs": int(srow["n"]) if srow else 0,
-                    "rows_out": out_snap.partitions.get(part, 0),
-                    "skew_max_over_mean": (
-                        round(float(srow["mx"]) / float(srow["mean"]), 3)
-                        if srow and srow["mean"] else None
-                    ),
-                    "watermark": (
-                        str(watermark) if watermark is not None else None
-                    ),
-                }
-            )
-        lineage.extend(records)
+        out_snap = out_table.write(result, mode="overwrite_partitions")
+
+        lineage.extend([
+            {
+                "partition": part,
+                "input_snapshot": snap.snapshot_id,
+                "rows_obs": obs_counts[part],
+                "rows_out": out_snap.partitions.get(part, 0),
+                # str(datetime) is fixed-width up to an optional fraction,
+                # so the recorded max_event_time strings sort in time order
+                "watermark": max(
+                    (m["max_event_time"] for p, m in s_info.items()
+                     if p <= part and m.get("max_event_time") is not None),
+                    default=None,
+                ),
+            }
+            for part in batch
+        ])
         checkpoint.mark_done({p: keys[p] for p in batch})
         processed.extend(batch)
     return processed

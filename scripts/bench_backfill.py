@@ -13,8 +13,8 @@ cheap numeric window chain forward; state writes are per-day deltas plus
 every-Kth snapshots.
 
 Round 4 adds the MATERIALIZE loop figure: obs dates are processed
-``batch_dates`` per Spark job (one as-of + one partitioned write + two
-small lineage aggregates per batch), so the driver-job count per
+``batch_dates`` per Spark job (one as-of write per batch; the lineage
+comes from the commits), so the driver-job count per
 materialized date drops below 1 — vs round 3's ≥3 jobs per date
 (365 sequential driver iterations for a year's backfill).
 

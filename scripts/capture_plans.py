@@ -8,6 +8,11 @@ shuffle=2x cores, maxPartitionBytes=1m) so plans match what bench.py
 executes.  Plans are written normalised (:func:`normalise`): expression
 ids, plan ids and the checkout path become placeholders, so the plans of
 two checkouts compare with ``diff -r plans/<a> plans/<b>``.
+
+A composite whose ``BENCH/data`` inputs are missing (``bench.py``
+generates them) is skipped with a printed reason and leaves no plan file.
+Any other failure to build or explain a plan, or a requested name that is
+not a query, writes no plan file and makes the script exit non-zero.
 """
 
 from __future__ import annotations
@@ -15,12 +20,14 @@ from __future__ import annotations
 import os
 import re
 import sys
+import traceback
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+BENCH_DATA = os.path.join(REPO, "BENCH", "data")
 
 
 def normalise(text: str, repo: str = REPO) -> str:
@@ -57,22 +64,18 @@ def main() -> None:
     # bench composites (bench.py's flagship and skew as-of, plans only)
     from feature_store_spark.pipeline.flagship import flagship_frame, skewed_asof
 
-    def data(name):
-        return spark.read.parquet(os.path.join(REPO, "BENCH", "data", name))
-
-    def image_feature_pipeline():
-        return flagship_frame(data("obs_150000.parquet"),
-                              data("images_150000.parquet"))
-
+    # name -> (its BENCH/data inputs, the builder they are passed to)
     composites = {
-        "image_feature_pipeline": image_feature_pipeline,
-        "asof_skew_union": lambda: skewed_asof(
-            data("skew_obs_200000.parquet"),
-            data("skew_events_2000000.parquet")),
+        "image_feature_pipeline": (
+            ["obs_150000.parquet", "images_150000.parquet"], flagship_frame),
+        "asof_skew_union": (
+            ["skew_obs_200000.parquet", "skew_events_2000000.parquet"],
+            skewed_asof),
     }
 
     skip_exec = {"image_pipeline", "resize_roundtrip"}  # they write sidecars
     names = list(REGISTRY) + list(composites)
+    failed = sorted(only - set(names))
     for name in names:
         if only and name not in only:
             continue
@@ -80,13 +83,28 @@ def main() -> None:
             continue
         try:
             if name in composites:
-                df = composites[name]()
+                inputs, build = composites[name]
+                missing = [
+                    f for f in inputs
+                    if not os.path.exists(os.path.join(BENCH_DATA, f))
+                ]
+                if missing:
+                    print(f"skipped {name}: BENCH/data/{missing[0]} is "
+                          "missing (bench.py generates it)")
+                    continue
+                df = build(*[
+                    spark.read.parquet(os.path.join(BENCH_DATA, f))
+                    for f in inputs
+                ])
             else:
                 fn, _ = REGISTRY[name]
                 df = fn(spark, SF_DIR)
             text = explain_str(df)
-        except Exception as e:  # pragma: no cover - diagnostic tool
-            text = f"ERROR building/explaining {name}: {e!r}"
+        except Exception:
+            print(f"FAILED {name}:", file=sys.stderr)
+            traceback.print_exc()
+            failed.append(name)
+            continue
         path = os.path.join(out_dir, f"{name}.txt")
         with open(path, "w") as f:
             f.write(normalise(text))
@@ -94,6 +112,8 @@ def main() -> None:
     from feature_store_spark.operators.caches import release_caches
     release_caches()
     spark.stop()
+    if failed:
+        sys.exit(f"no plan for {len(failed)} name(s): {', '.join(failed)}")
 
 
 if __name__ == "__main__":

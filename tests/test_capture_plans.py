@@ -1,11 +1,14 @@
 """``scripts/capture_plans.py`` writes plans that two checkouts can
 compare with ``diff -r``: run-specific ids and the checkout path become
-placeholders, and nothing else changes."""
+placeholders, and nothing else changes.  A plan it cannot capture is
+never written as a file, and the run exits non-zero."""
 
 from __future__ import annotations
 
 import importlib.util
 import os
+import subprocess
+import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -48,3 +51,23 @@ def test_normalise_replaces_ids_and_checkout_path():
     other = (SAMPLE.replace("/work/a", "/work/b").replace("#29", "#39")
              .replace("plan_id=457", "plan_id=12"))
     assert norm(other, repo="/work/b") == WANT
+
+
+def test_failed_plan_exits_nonzero_and_writes_no_file(tmp_path):
+    """A query that cannot be built (no input tables) fails the run and
+    leaves no plan file; a composite without its ``BENCH/data`` inputs is
+    skipped with a reason, not written as an error text."""
+    out = tmp_path / "plans"
+    env = {**os.environ, "SPARK_GRAFT_CPUS": "1",
+           "SPARK_GRAFT_SF_DIR": str(tmp_path / "no_tables")}
+    run = subprocess.run(
+        [sys.executable, os.path.join(REPO, "scripts", "capture_plans.py"),
+         str(out), "group_count", "asof_skew_union"],
+        env=env, capture_output=True, text=True, timeout=600)
+    assert run.returncode != 0, run.stdout + run.stderr
+    assert "FAILED group_count" in run.stderr
+    assert not (out / "group_count.txt").exists()
+    data = os.path.join(REPO, "BENCH", "data", "skew_obs_200000.parquet")
+    if not os.path.exists(data):
+        assert "skipped asof_skew_union" in run.stdout
+        assert not (out / "asof_skew_union.txt").exists()

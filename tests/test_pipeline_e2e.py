@@ -78,7 +78,7 @@ def _oracle_output(img_pdf: pd.DataFrame, obs_pdf: pd.DataFrame) -> pd.DataFrame
 
 
 LINEAGE_FIELDS = {"partition", "input_snapshot", "rows_obs", "rows_out",
-                  "skew_max_over_mean", "watermark"}
+                  "watermark"}
 
 
 def _run_all(spark, setup, subdir: str):
@@ -131,20 +131,24 @@ def test_golden_parity_vs_oracle(spark, setup, full_run):
 
 
 def test_lineage_records(full_run, setup):
-    _, _, obs_pdf, _, _ = setup
+    _, img_pdf, obs_pdf, _, _ = setup
     _, _, lin, processed = full_run
     recs = lin.records()
     assert len(recs) == len(processed) == obs_pdf["obs_date"].nunique()
-    first_event_date = setup[1]["event_time"].min().strftime("%Y-%m-%d")
+    first_event_date = img_pdf["event_time"].min().strftime("%Y-%m-%d")
     for r in recs:
+        d = r["partition"]
         assert set(r) == LINEAGE_FIELDS
         assert r["input_snapshot"].startswith("snap-")
         assert r["rows_obs"] == r["rows_out"] > 0  # row preservation
-        assert r["skew_max_over_mean"] >= 1.0
-        # watermark = max visible event_time; null only for partitions whose
-        # horizon predates the first feature event
-        if r["partition"] >= first_event_date:
-            assert r["watermark"] is not None
+        assert r["rows_obs"] == int((obs_pdf["obs_date"] == d).sum())
+        # watermark = max event_time of the events dated ≤ D; null only
+        # for partitions whose horizon predates the first feature event
+        visible = img_pdf.loc[img_pdf["event_date"] <= d, "event_time"]
+        if d >= first_event_date:
+            assert r["watermark"] == str(visible.max().to_pydatetime()), d
+        else:
+            assert visible.empty and r["watermark"] is None, d
 
 
 def test_lineage_log_with_retired_fields_stays_readable(spark, setup):
@@ -191,7 +195,7 @@ def test_batched_equals_per_date(spark, setup, full_run):
     """The batched obs-date loop (round-4: N consecutive dates per Spark
     job against state@<D1 ∪ features@[D1..Dn]) must equal per-date
     processing exactly — output rows AND per-partition lineage
-    (row counts, skew, watermark)."""
+    (row counts, watermark)."""
     root, img_pdf, obs_pdf, images_t, obs_t = setup
     out_full, _, lin_full, _ = full_run  # default batch_dates
     out_t = PartitionedTable(f"{root}/perdate", "features", "obs_date")
@@ -208,7 +212,7 @@ def test_batched_equals_per_date(spark, setup, full_run):
     fb = {r["partition"]: r for r in lin_full.records()}
     assert fa.keys() == fb.keys()
     for p in fa:
-        for k in ("rows_obs", "rows_out", "watermark", "skew_max_over_mean"):
+        for k in ("rows_obs", "rows_out", "watermark"):
             assert fa[p][k] == fb[p][k], (p, k)
 
 
@@ -599,6 +603,44 @@ def test_state_deltas_and_snapshots(spark, setup, tmp_path):
     got_latest = dict(zip(st["image_id"], st["event_time"]))
     want_latest = dict(zip(want["image_id"], want["event_time"]))
     assert got_latest == want_latest
+
+
+def test_state_commit_records_max_event_time(spark, setup, tmp_path):
+    """Each state commit records its partition's max ``event_time``,
+    observed on the features write (materialize's watermark source).  A
+    state table committed before that field existed counts as stale: the
+    next update recomputes it once and records the field."""
+    import json
+
+    from feature_store_spark.pipeline.materialize import update_feature_table
+
+    root, img_pdf, obs_pdf, images_t, obs_t = setup
+    base = str(tmp_path)
+    feats_t = PartitionedTable(base, "feats6", "event_date")
+    state_t = PartitionedTable(base, "state6", "event_date")
+    parts = images_t.partitions()
+    want = {
+        p: str(img_pdf.loc[img_pdf.event_date == p, "event_time"].max()
+               .to_pydatetime())
+        for p in parts
+    }
+
+    def recorded():
+        info = state_t.partition_info()
+        return {p: info[p]["max_event_time"] for p in parts}
+
+    update_feature_table(spark, images_t, feats_t, state_t, batch_parts=4)
+    assert recorded() == want
+    # the same manifest as a commit made before the field existed
+    entries = state_t._read_manifest()
+    for e in entries:
+        for m in e.get("partition_meta", {}).values():
+            del m["max_event_time"]
+    with open(state_t._manifest_path, "w") as f:
+        f.writelines(json.dumps(e) + "\n" for e in entries)
+    assert update_feature_table(spark, images_t, feats_t, state_t) == parts
+    assert recorded() == want
+    assert update_feature_table(spark, images_t, feats_t, state_t) == []
 
 
 def test_crash_between_feature_and_state_commit_recovers(spark, setup, tmp_path):

@@ -130,9 +130,9 @@ def test_one_new_date_materialize_job_count(spark, tmp_path):
     lin = LineageLog(os.path.join(root, "_lineage.jsonl"))
 
     def run():
-        update_feature_table(spark, images_t, feats_t, state_t,
-                             feature_lineage_for(feats_t))
-        return _spark_jobs(spark, lambda: materialize(
+        update = _spark_jobs(spark, lambda: update_feature_table(
+            spark, images_t, feats_t, state_t, feature_lineage_for(feats_t)))
+        return update, _spark_jobs(spark, lambda: materialize(
             spark, images_t, obs_t, out_t, ckpt, lin,
             features_table=feats_t, state_table=state_t))
 
@@ -143,9 +143,11 @@ def test_one_new_date_materialize_job_count(spark, tmp_path):
     run()
     images_t.write(spark.createDataFrame(img[img.event_date == new]))
     obs_t.write(spark.createDataFrame(obs[obs.obs_date == new]))
-    done, n = run()
+    (updated, n_update), (done, n) = run()
+    assert updated == [new]
+    assert n_update == 8, f"one-new-date update ran {n_update} jobs, want 8"
     assert done == [new]
-    assert n == 9, f"one-new-date materialize ran {n} jobs, want 9"
+    assert n == 3, f"one-new-date materialize ran {n} jobs, want 3"
 
 
 # ---------------------------------------------------------------------
