@@ -56,6 +56,7 @@ import json
 import os
 import re
 import warnings
+from collections.abc import Callable
 from dataclasses import dataclass, field
 
 import pyarrow.parquet as pq
@@ -393,7 +394,7 @@ class PartitionedTable:
         df: DataFrame,
         mode: str = "overwrite_partitions",
         meta: dict | None = None,
-        partition_meta: dict[str, dict] | None = None,
+        partition_meta: dict[str, dict] | Callable[[], dict] | None = None,
     ) -> Snapshot:
         """Commit a write as a new snapshot.  ``overwrite_partitions``
         replaces only the partitions present in ``df`` (idempotent re-runs —
@@ -403,7 +404,9 @@ class PartitionedTable:
         ids, input lineage, ...); ``partition_meta`` adds a per-partition
         overlay for batched commits (ONE commit, one Spark write job, may
         cover many partitions, each content-addressed by its own inputs —
-        see :meth:`partition_info`).
+        see :meth:`partition_info`).  A callable ``partition_meta`` is
+        called after the data write and before the manifest append, so it
+        can record values observed on the write itself.
 
         Rows with a NULL partition value reject the whole commit (they land
         in an on-disk ``__HIVE_DEFAULT_PARTITION__`` dir that a manifest
@@ -428,6 +431,8 @@ class PartitionedTable:
         seq = max(max_seq + 1, len(log))
         vdir = os.path.join(self.data_path, f"v{seq:04d}")
         df.write.partitionBy(self.partition_col).mode("overwrite").parquet(vdir)
+        if callable(partition_meta):
+            partition_meta = partition_meta()
         # bookkeeping without a Spark job: row counts from the
         # footers of the files just written (commit cost ∝ rows written),
         # schema recorded next to them for reads to use instead of
@@ -518,8 +523,8 @@ class PartitionedTable:
         :meth:`partition_info` of partitions whose latest writer is an
         expired commit is folded into a synthetic ``expire_base`` entry
         at the head of the compacted log — the incremental pipeline's
-        content-addressed validity checks (``decoded_dirs`` /
-        ``state_kind``) must keep working, or every expire would trigger
+        content-addressed validity checks (``input_dirs`` /
+        ``features_key``) must keep working, or every expire would trigger
         a permanent full-history recompute.
 
         The log rewrite is atomic (tmp + rename, legacy-prefix file

@@ -4,35 +4,30 @@ per-partition lineage records — input snapshot id, row counts,
 watermark").  The lineage comes from bookkeeping the tables already keep:
 obs row counts from the obs snapshot (parquet footers), output row counts
 from the write's footers, and the watermark from the per-partition
-``max_event_time`` each state commit records — no Spark job of its own.
+``max_event_time`` each features commit records — no Spark job of its own.
 
-Three-level incremental design (round-2 reworked the O(P×H) read loop;
-round 3 split decode from the window chain and made state delta-based —
-the round-2 judge's backfill-re-decode-cascade and state-write-
-amplification findings):
+A new day writes ONE derived table, the features table; the state table
+is a cache of it, written only at its snapshot positions:
 
-1. DECODE stage (``update_feature_table`` stage A) — each image partition
-   is decoded into a persisted DECODED table, content-addressed by that
-   partition's OWN input dirs only.  Decode has no cross-partition state,
-   so a backfill re-decodes exactly the changed partitions — a day-1
-   backfill of a year re-decodes 1 day, not 365 (the expensive Arrow UDF
-   never cascades).
+1. FEATURES (``update_feature_table``) — one partition per image
+   partition, holding the decode columns and the window columns.  The
+   window chain recomputes forward from the first invalid partition (it
+   is the only part whose semantics chain), but decode runs only for the
+   partitions whose OWN input dirs changed (recorded per partition in
+   the features commit): every other partition, and the rolling context,
+   read their decode columns back from the features table.  Decode has no
+   cross-partition state, so a backfill of day 1 of a year re-decodes 1
+   day, not 365 (the expensive Arrow UDF never cascades) and only the
+   cheap numeric chain recomputes.
 
-2. WINDOW-CHAIN stage (stage B) — rolling/lag/session columns are computed
-   per partition over the (cheap, numeric) decoded table, carrying
-   per-entity window state (last event time / phash / session index)
-   forward.  This chain DOES recompute forward from the first changed
-   partition — it's the only part whose semantics chain — but reads only
-   decoded features.  The STATE table records, per partition, a DELTA
-   (latest full feature row per entity SEEN that partition — O(|day|)
-   rows) and a full SNAPSHOT every ``state_snapshot_every``-th partition
-   (O(|entities|)); ``read_state_asof`` resolves state@P from the newest
-   snapshot ≤ P plus later deltas.  Round 2 wrote a full snapshot per
-   partition: O(P × |entities|) rows/year at 10^9 entities.
-   Crash-safety: a partition is valid only when BOTH its features and its
-   state commits exist with matching decode lineage, so a crash between
-   the two commits forces a clean recompute instead of a half-read
-   (round-2 ADVICE).
+2. STATE — per-entity latest feature row, a full SNAPSHOT at every
+   ``state_snapshot_every``-th image partition.  ``read_state_asof``
+   resolves state@P as the dedup of the newest valid snapshot ≤ P and the
+   feature partitions after it, so a day between snapshots costs no state
+   write.  A snapshot is valid only while its recorded ``features_key``
+   (a digest of the feature version dirs ≤ its partition) matches the
+   features table: a crash after a features commit, or a backfill before
+   the snapshot, invalidates it instead of letting it be half-read.
 
 3. ``materialize`` — per observation-date partition D, as-of join the obs
    rows against (state@<D ∪ features@D): O(|entities| + |day D|) feature
@@ -50,7 +45,7 @@ Lifecycle per observation-date partition D:
      the feature and state version dirs of every partition ≤ D, and the
      lookback — everything D's output reads.  A new day recomputes only
      itself; a backfill of day b recomputes exactly the dates ≥ b, whose
-     feature/state partitions the window chain rewrote.
+     feature partitions the window chain rewrote.
   2. assemble state@<D ∪ features@D (manifest-pruned reads, no listing)
   3. as-of join for obs rows in D
   4. overwrite exactly partition D of the output (idempotent)
@@ -65,6 +60,7 @@ killed job resumes by skipping completed partitions.
 from __future__ import annotations
 
 import datetime as _dt
+import functools
 import hashlib
 import json
 import os
@@ -74,9 +70,10 @@ from pyspark.sql import DataFrame, Observation, SparkSession, Window
 
 from feature_store_spark.functions.images import with_image_features
 from feature_store_spark.io.jsonl import append_jsonl, read_jsonl
-from feature_store_spark.io.tables import PartitionedTable
+from feature_store_spark.io.tables import PartitionedTable, Snapshot
 from feature_store_spark.operators.asof import asof_join
 from feature_store_spark.operators.windows import (
+    dedup_latest,
     sessionize,
     with_lag_lead,
     with_rolling,
@@ -249,85 +246,66 @@ def _date_minus(part: str, days: int) -> str:
 _STATE_DEDUP_DESC = ["event_time", "phash", "caption"]
 
 
-def default_decoded_table(
-    features_table: PartitionedTable, partition_col: str
-) -> PartitionedTable:
-    return PartitionedTable(features_table.path, "_decoded", partition_col)
-
-
-def default_sketch_table(
-    features_table: PartitionedTable, partition_col: str
-) -> PartitionedTable:
-    return PartitionedTable(features_table.path, "_sketches", partition_col)
+def default_sketch_table(features_table: PartitionedTable) -> PartitionedTable:
+    return PartitionedTable(
+        features_table.path, "_sketches", features_table.partition_col
+    )
 
 
 # decode stats summarized per partition into mergeable KLL sketches
 SKETCH_VALUE_COLS = ["mean_r", "std_r"]
 
 
-def update_sketch_table(
-    spark: SparkSession,
-    decoded_table: PartitionedTable,
-    sketch_table: PartitionedTable,
-    dec_map: dict[str, list[str]],
-) -> list[str]:
-    """Maintain the per-partition SKETCH table next to the decoded table:
-    one row per image partition holding mergeable summaries — row count,
-    a DataSketches HLL over ``image_id`` (distinct entities) and a KLL
-    quantile sketch per decode stat (:data:`SKETCH_VALUE_COLS`).
-
-    Content-addressed per partition by the decoded dirs (same validity
-    key as stage B), so an incremental update or backfill re-sketches
-    exactly the changed partitions — ONE small aggregation job over the
-    just-decoded parquet (never a decode, never history).  Corpus-level
-    stats are then resolved by :func:`corpus_feature_stats` from this
-    tiny table alone: re-aggregation without re-scan, at any history
-    length.  Returns the partitions re-sketched."""
-    sk_info = (
-        sketch_table.partition_info()
-        if sketch_table.current_snapshot() else {}
-    )
-    changed = [
-        p for p in sorted(dec_map)
-        if sk_info.get(p, {}).get("decoded_dirs") != sorted(dec_map[p])
-    ]
-    if not changed:
-        return []
-    pcol = decoded_table.partition_col
-    decoded = decoded_table.read(spark, partitions=changed)
-    sketches = decoded.groupBy(F.col(pcol).alias(sketch_table.partition_col)).agg(
-        F.count(F.lit(1)).alias("n"),
-        F.hll_sketch_agg("image_id").alias("entity_hll"),
-        *[
-            F.kll_sketch_agg_double(F.col(c).cast("double"))
-            .alias(f"{c}_kll")
-            for c in SKETCH_VALUE_COLS
-        ],
-    )
-    sketch_table.write(
-        sketches,
-        mode="overwrite_partitions",
-        partition_meta={
-            p: {"decoded_dirs": sorted(dec_map[p])} for p in changed
-        },
-    )
-    return changed
-
-
 def corpus_feature_stats(
     spark: SparkSession,
-    sketch_table: PartitionedTable,
+    features_table: PartitionedTable,
     quantiles: tuple[float, ...] = (0.5, 0.9, 0.99),
 ) -> DataFrame:
-    """Corpus-level stats from the sketch table ALONE (no history scan):
-    total rows, approx distinct entities (HLL union), and approximate
-    quantiles of each decode stat (KLL merge) — one output row.  Column
-    names follow ``<col>_q50`` etc. (:func:`quantile_col_name`)."""
+    """Corpus-level stats without a history scan: total rows, approx
+    distinct entities (HLL union), and approximate quantiles of each
+    decode stat (KLL merge) — one output row.  Column names follow
+    ``<col>_q50`` etc. (:func:`quantile_col_name`).
+
+    Sketches are built on read.  The SKETCH table
+    (:func:`default_sketch_table`) holds one row per feature partition —
+    row count, a DataSketches HLL over ``image_id`` and a KLL sketch per
+    :data:`SKETCH_VALUE_COLS` — keyed by that partition's ``input_dirs``.
+    This call first re-sketches, in ONE aggregation job over the features
+    table, the partitions whose input dirs changed since (never history:
+    the sketched columns are decode outputs, which depend on the
+    partition's own input alone), then merges the sketch table."""
     from feature_store_spark.operators.grouped import _quantile_names
 
+    sketch_table = default_sketch_table(features_table)
+    f_info = features_table.partition_info()
+    sk_info = sketch_table.partition_info()
+    changed = [
+        p for p in features_table.partitions()
+        if sk_info.get(p, {}).get("input_dirs") != f_info[p]["input_dirs"]
+    ]
+    if changed:
+        pcol = features_table.partition_col
+        sketches = features_table.read(spark, partitions=changed).groupBy(
+            pcol
+        ).agg(
+            F.count(F.lit(1)).alias("n"),
+            F.hll_sketch_agg("image_id").alias("entity_hll"),
+            *[
+                F.kll_sketch_agg_double(F.col(c).cast("double"))
+                .alias(f"{c}_kll")
+                for c in SKETCH_VALUE_COLS
+            ],
+        )
+        sketch_table.write(
+            sketches,
+            mode="overwrite_partitions",
+            partition_meta={
+                p: {"input_dirs": f_info[p]["input_dirs"]} for p in changed
+            },
+        )
+
     names = _quantile_names(quantiles)
-    df = sketch_table.read(spark)
-    merged = df.agg(
+    merged = sketch_table.read(spark).agg(
         F.sum("n").alias("rows"),
         F.hll_sketch_estimate(F.hll_union_agg("entity_hll"))
         .cast("long").alias("approx_distinct_entities"),
@@ -348,36 +326,85 @@ def corpus_feature_stats(
     )
 
 
+def _prefix_keys(snap: Snapshot | None) -> dict[str, str]:
+    """Per partition P of a snapshot: a digest of the version dirs of every
+    partition ≤ P (one running hash).  Dirs are immutable and every commit
+    writes new ones, so an equal key means equal rows up to P."""
+    h, keys = hashlib.sha256(), {}
+    for p, dirs in sorted(snap.mapping.items()) if snap else []:
+        h.update(json.dumps([p, sorted(dirs)]).encode())
+        keys[p] = h.hexdigest()[:16]
+    return keys
+
+
+def _state_asof(
+    spark: SparkSession,
+    state_table: PartitionedTable,
+    features_table: PartitionedTable,
+    upto: str | None,
+) -> DataFrame | None:
+    """The per-entity latest feature row over feature partitions ≤ ``upto``:
+    the newest VALID snapshot (its ``features_key`` still matches the
+    features table) plus the feature partitions after it."""
+    f_snap = features_table.current_snapshot()
+    parts = [
+        p for p in sorted(f_snap.mapping if f_snap else [])
+        if upto is None or p <= upto
+    ]
+    if not parts:
+        return None
+    keys = _prefix_keys(f_snap)
+    s_info = state_table.partition_info()
+    base = max(
+        (p for p in parts if s_info.get(p, {}).get("features_key") == keys[p]),
+        default=None,
+    )
+    frames = []
+    if base is not None:
+        frames.append(state_table.read(spark, partitions=[base]))
+    after = [p for p in parts if base is None or p > base]
+    if after:
+        frames.append(features_table.read(spark, partitions=after))
+    df = functools.reduce(
+        DataFrame.unionByName, [f.select(*STATE_COLS) for f in frames]
+    )
+    return dedup_latest(df, keys=["image_id"], order_desc=_STATE_DEDUP_DESC)
+
+
 def read_state_asof(
     spark: SparkSession,
     state_table: PartitionedTable,
     upto: str | None = None,
 ) -> DataFrame | None:
     """Resolve the full per-entity latest state at partitions ≤ ``upto``
-    (default: all): the newest SNAPSHOT partition plus every DELTA after
-    it, deduped to one row per entity.  Reads at most
-    ``state_snapshot_every`` small partitions (manifest-pruned)."""
-    from feature_store_spark.operators.windows import dedup_latest
-
-    if state_table.current_snapshot() is None:
+    (default: all): the newest valid SNAPSHOT partition plus every feature
+    partition after it, deduped to one row per entity.  Reads one
+    snapshot and fewer than ``state_snapshot_every`` feature partitions
+    (manifest-pruned).  The features table is the one the state commits
+    name (recorded relative to the state table)."""
+    snap = state_table.current_snapshot()
+    if snap is None:
         return None
-    info = state_table.partition_info()
-    parts = [
-        p for p in state_table.partitions() if upto is None or p <= upto
-    ]
-    if not parts:
-        return None
-    snaps = [
-        p for p in parts if info.get(p, {}).get("state_kind") == "snapshot"
-    ]
-    base = max(snaps) if snaps else None
-    wanted = [p for p in parts if base is None or p >= base]
-    df = state_table.read(spark, partitions=wanted).drop(
-        state_table.partition_col
+    ref = snap.meta.get("features_table")
+    if ref is None:
+        raise ValueError(
+            f"{state_table.path}: no commit names its features table (a "
+            "state table from before snapshot-only state) — run "
+            "update_feature_table on it first"
+        )
+    path = os.path.normpath(os.path.join(state_table.path, ref["path"]))
+    features_table = PartitionedTable(
+        os.path.dirname(path), os.path.basename(path), ref["partition_col"]
     )
-    # entity's latest row wins; ties impossible across partitions (daily
-    # event_time ranges are disjoint) and pre-resolved within each delta
-    return dedup_latest(df, keys=["image_id"], order_desc=_STATE_DEDUP_DESC)
+    return _state_asof(spark, state_table, features_table, upto)
+
+
+def _utc(micros: int | None) -> str | None:
+    """Microseconds since the epoch as ``str`` of the naive UTC datetime,
+    whatever the driver's time zone."""
+    if micros is None:
+        return None
+    return str(_dt.datetime(1970, 1, 1) + _dt.timedelta(microseconds=micros))
 
 
 def update_feature_table(
@@ -389,255 +416,180 @@ def update_feature_table(
     state_snapshot_every: int = 10,
     batch_parts: int = 32,
 ) -> list[str]:
-    """Bring the decoded / feature / state tables up to date with the
-    images table's current snapshot.
+    """Bring the feature and state tables up to date with the images
+    table's current snapshot.
 
-    Stage A (decode): each image partition whose OWN input dirs changed is
-    decoded into the decoded table (:func:`default_decoded_table`) in ONE
-    batched commit — nothing
-    cascades, backfills re-decode exactly the changed partitions.  A
-    sketch stage follows (:func:`update_sketch_table`): per-partition
-    mergeable summaries (HLL entities, KLL decode-stat quantiles) in the
-    sketch table (:func:`default_sketch_table`), content-addressed the same way, so corpus stats
-    resolve from sketches alone (:func:`corpus_feature_stats`).
+    Feature partitions (decode cols + window cols) recompute forward from
+    the first partition that is invalid: its own input dirs changed, its
+    commit lacks ``max_event_time``, or it sits at a snapshot position
+    (every ``state_snapshot_every``-th image partition, by position, so
+    the cadence is stable under backfills) whose state snapshot is
+    missing or stale.  They are processed ``batch_parts`` consecutive
+    partitions per Spark job (one span call of
+    :func:`_chain_window_features` equals per-partition chaining, see its
+    docstring).  Inside a span only the partitions whose own input dirs
+    changed run ``with_image_features``; the rest read their decode
+    columns back from the features table, so decode runs once per input
+    change.
 
-    Stage B (window chain): feature partitions (decoded cols + window
-    cols) recompute forward from the first partition whose features or
-    state commit is missing or carries stale decode lineage — processed
-    ``batch_parts`` consecutive partitions per Spark job (round 4: the
-    per-partition loop serialized a year's initial build on ~4 driver
-    actions per day; one span call of :func:`_chain_window_features`
-    equals per-partition chaining, see its docstring).  Each span is TWO
-    commits: all feature partitions (partition tag = source partition),
-    then all state partitions — per-partition DELTAS with a full
-    snapshot every ``state_snapshot_every``-th image partition (by
-    position, so the cadence is stable under backfills; a snapshot at P
-    merges the pre-span state with the span's written rows ≤ P).
-    Features are written before state; validity requires both, so a
-    crash between the two commits recomputes the span.  One
-    ``DataFrame.observe`` on the features write takes each span
-    partition's max ``event_time`` (no extra job); the state commit
-    records it as ``max_event_time``, the source of ``materialize``'s
-    watermark, and a state partition without it counts as stale.
+    Each span is one features commit, plus a state commit only when the
+    span holds snapshot positions (a snapshot at P merges the pre-span
+    state with the span's written rows ≤ P).  One ``DataFrame.observe`` on
+    the features write takes each span partition's max ``event_time`` (no
+    extra job); the commit records it, in UTC, as ``max_event_time``, the
+    source of ``materialize``'s watermark.  Each state commit names its
+    features table, relative to the state table, for
+    :func:`read_state_asof`.
 
     Returns the list of partitions whose window chain was (re)computed.
     """
-    from feature_store_spark.operators.windows import dedup_latest
-
     snap = images_table.current_snapshot()
     if snap is None:
         raise ValueError("images table has no committed snapshot")
-    decoded_table = default_decoded_table(
-        features_table, images_table.partition_col
-    )
     img_parts = sorted(snap.mapping)
     if not img_parts:  # committed-but-empty snapshot: nothing to do
         return []
-
-    # -- stage A: decode changed partitions only, ONE batched commit -----
-    # (one Spark write job and one manifest append regardless of how many
-    # partitions changed — round-3 ADVICE: per-partition commits made an
-    # initial load O(P) commits; each partition stays content-addressed by
-    # its OWN input dirs via the commit's partition_meta overlay)
-    dec_info = (
-        decoded_table.partition_info()
-        if decoded_table.current_snapshot() else {}
-    )
-    dec_changed = [
+    f_info = features_table.partition_info()
+    s_info = state_table.partition_info()
+    f_keys = _prefix_keys(features_table.current_snapshot())
+    snap_parts = set(img_parts[::max(1, state_snapshot_every)])
+    redecode = {
         p for p in img_parts
-        if dec_info.get(p, {}).get("input_dirs") != sorted(snap.mapping[p])
-    ]
-    if dec_changed:
-        raw = with_image_features(
-            images_table.read(spark, partitions=dec_changed)
-        ).select(
-            "image_id", "event_time", *DECODE_COLS,
-            F.col(images_table.partition_col).alias(
-                decoded_table.partition_col
-            ),
-        )
-        dsnap = decoded_table.write(
-            raw,
-            mode="overwrite_partitions",
-            meta={"input_snapshot": snap.snapshot_id},
-            partition_meta={
-                p: {"input_dirs": sorted(snap.mapping[p])}
-                for p in dec_changed
-            },
-        )
-        if lineage is not None:
-            lineage.extend([
-                {
-                    "kind": "decode",
-                    "partition": part,
-                    "input_snapshot": snap.snapshot_id,
-                    "rows_decoded": dsnap.partitions.get(part, 0),
-                }
-                for part in dec_changed
-            ])
-    dec_map = decoded_table.current_snapshot().mapping
-
-    # -- stage A': per-partition mergeable sketches over the decoded
-    # stats (content-addressed like stage B, so only changed partitions
-    # re-sketch; corpus stats resolve from the sketch table without ever
-    # re-scanning history — see corpus_feature_stats)
-    update_sketch_table(
-        spark, decoded_table,
-        default_sketch_table(features_table, images_table.partition_col),
-        dec_map,
+        if f_info.get(p, {}).get("input_dirs") != sorted(snap.mapping[p])
+    }
+    todo_from = next(
+        (
+            p for p in img_parts
+            if p in redecode
+            or "max_event_time" not in f_info[p]
+            or (p in snap_parts
+                and s_info.get(p, {}).get("features_key") != f_keys[p])
+        ),
+        None,
     )
-
-    # -- stage B: window chain forward from the first invalid partition --
-    f_info = (
-        features_table.partition_info()
-        if features_table.current_snapshot() else {}
-    )
-    s_info = (
-        state_table.partition_info()
-        if state_table.current_snapshot() else {}
-    )
-    todo_from = None
-    for p in img_parts:
-        key = sorted(dec_map[p])
-        if (
-            f_info.get(p, {}).get("decoded_dirs") != key
-            or s_info.get(p, {}).get("decoded_dirs") != key
-            or "max_event_time" not in s_info.get(p, {})
-        ):
-            todo_from = p
-            break
     if todo_from is None:
         return []
     done_before = [p for p in img_parts if p < todo_from]
     todo = [p for p in img_parts if p >= todo_from]
 
-    fcol = features_table.partition_col
+    fcol, scol = features_table.partition_col, state_table.partition_col
+    state_meta = {
+        "input_snapshot": snap.snapshot_id,
+        "features_table": {
+            "path": os.path.relpath(features_table.path, state_table.path),
+            "partition_col": fcol,
+        },
+    }
     processed: list[str] = []
     for span in _chunks(todo, max(1, batch_parts)):
         ready = done_before + processed
         first = span[0]
-        # keep the source-partition tag through the chain so the batched
-        # write labels every row by the partition it came from (never by
+        # decode columns per span partition, tagged with the partition they
+        # came from so the batched write labels every row by it (never by
         # re-deriving the date from event_time — a forced label must
         # round-trip even if a row's timestamp strays from its partition)
-        decoded = decoded_table.read(spark, partitions=span) \
-            .withColumnRenamed(decoded_table.partition_col, "__src_part")
+        fresh = [p for p in span if p in redecode]
+        kept = [p for p in span if p not in redecode]
+        sources = []
+        if fresh:
+            sources.append((with_image_features(
+                images_table.read(spark, partitions=fresh)
+            ), images_table.partition_col))
+        if kept:
+            sources.append(
+                (features_table.read(spark, partitions=kept), fcol)
+            )
+        decoded = functools.reduce(DataFrame.unionByName, [
+            df.select("image_id", "event_time", *DECODE_COLS,
+                      F.col(col).alias("__src_part"))
+            for df, col in sources
+        ])
         ctx_lo = _date_minus(first, ROLL_CTX_DAYS)
         ctx_parts = [p for p in ready if ctx_lo <= p < first]
         ctx = (
-            decoded_table.read(spark, partitions=ctx_parts).drop(
-                decoded_table.partition_col
-            )
+            features_table.read(spark, partitions=ctx_parts)
             if ctx_parts else None
         )
         state = (
-            read_state_asof(spark, state_table, upto=ready[-1])
+            _state_asof(spark, state_table, features_table, ready[-1])
             if ready else None
         )
         feats = _chain_window_features(
             decoded, ctx, state, keep_cols=("__src_part",)
-        )
-        pmeta = {
-            p: {
-                "decoded_dirs": sorted(dec_map[p]),
-                "input_dirs": sorted(snap.mapping[p]),
-            }
-            for p in span
-        }
+        ).withColumnRenamed("__src_part", fcol)
         max_ts = Observation()
-        features_table.write(
-            feats.withColumnRenamed("__src_part", fcol).observe(max_ts, *[
-                F.max(F.when(F.col(fcol) == p, F.col("event_time"))).alias(p)
+        fsnap = features_table.write(
+            feats.observe(max_ts, *[
+                F.unix_micros(F.max(
+                    F.when(F.col(fcol) == p, F.col("event_time"))
+                ).cast("timestamp")).alias(p)
                 for p in span
             ]),
             mode="overwrite_partitions",
             meta={"input_snapshot": snap.snapshot_id},
-            partition_meta=pmeta,
-        )
-
-        # state from the WRITTEN partitions (cheap parquet read-back — the
-        # window chain and decode never recompute for the state commit):
-        # per-partition deltas, replaced by a full merged snapshot at the
-        # snapshot-cadence positions, all in ONE partitioned commit
-        written = features_table.read(spark, partitions=span)
-        snap_parts = {
-            p for p in span
-            if img_parts.index(p) % state_snapshot_every == 0
-        }
-        kinds = {
-            p: ("snapshot" if p in snap_parts else "delta") for p in span
-        }
-        deltas = dedup_latest(
-            written, keys=[fcol, "image_id"], order_desc=_STATE_DEDUP_DESC
-        ).select(F.col(fcol).alias(state_table.partition_col), *STATE_COLS)
-        state_frames = []
-        nonsnap = [p for p in span if p not in snap_parts]
-        if nonsnap:
-            state_frames.append(
-                deltas.where(
-                    F.col(state_table.partition_col).isin(nonsnap)
-                )
-            )
-        for p in sorted(snap_parts):
-            # manifest-pruned read of span partitions ≤ p: the partition
-            # column is path-derived, so a .where on it would row-filter
-            # AFTER scanning every span file — listing only the wanted
-            # leaf dirs prunes at the file level
-            upto_p = features_table.read(
-                spark, partitions=[q for q in span if q <= p]
-            ).drop(fcol)
-            merged = (
-                state.select(*STATE_COLS).unionByName(
-                    upto_p.select(*STATE_COLS)
-                )
-                if state is not None else upto_p.select(*STATE_COLS)
-            )
-            state_frames.append(
-                dedup_latest(
-                    merged, keys=["image_id"], order_desc=_STATE_DEDUP_DESC
-                ).select(
-                    F.lit(p).alias(state_table.partition_col), *STATE_COLS
-                )
-            )
-        state_df = state_frames[0]
-        for f in state_frames[1:]:
-            state_df = state_df.unionByName(f)
-        max_event_time = {
-            p: None if t is None else str(t) for p, t in max_ts.get.items()
-        }
-        state_table.write(
-            state_df,
-            mode="overwrite_partitions",
-            meta={"input_snapshot": snap.snapshot_id},
-            partition_meta={
-                p: {**pmeta[p], "state_kind": kinds[p],
-                    "max_event_time": max_event_time[p]}
-                for p in span
+            partition_meta=lambda: {
+                p: {"input_dirs": sorted(snap.mapping[p]),
+                    "max_event_time": _utc(micros)}
+                for p, micros in max_ts.get.items()
             },
         )
-        if lineage is not None:
-            records = []
-            for part in span:
-                # per-partition context = every READY-or-in-span partition
-                # inside the rolling window BY DATE RANGE — a count-based
-                # [-ROLL_CTX_DAYS:] slice misstated the real inputs for
-                # early/mid-span partitions (round-4 review: it dropped
-                # pre-span context and included out-of-window neighbors
-                # when partition dates are sparse)
-                part_lo = _date_minus(part, ROLL_CTX_DAYS)
-                records.append(
-                    {
-                        "kind": "feature_update",
-                        "partition": part,
-                        "input_snapshot": snap.snapshot_id,
-                        "ctx_partitions": [
-                            q for q in (ready + list(span))
-                            if part_lo <= q < part
-                        ],
-                        "state_kind": kinds[part],
-                    }
+        if lineage is not None and fresh:
+            lineage.extend([
+                {
+                    "kind": "decode",
+                    "partition": part,
+                    "input_snapshot": snap.snapshot_id,
+                    "rows_decoded": fsnap.partitions.get(part, 0),
+                }
+                for part in fresh
+            ])
+
+        # state snapshots at the span's snapshot positions, from the
+        # WRITTEN partitions (cheap parquet read-back — the window chain
+        # and decode never recompute for the state commit), all in ONE
+        # partitioned commit.  The partition column is path-derived, so
+        # each snapshot reads its span partitions ≤ p by manifest (a
+        # .where on it would row-filter AFTER scanning every span file)
+        snaps = [p for p in span if p in snap_parts]
+        if snaps:
+            keys = _prefix_keys(fsnap)
+            frames = []
+            for p in snaps:
+                upto_p = features_table.read(
+                    spark, partitions=[q for q in span if q <= p]
+                ).select(*STATE_COLS)
+                if state is not None:
+                    upto_p = state.select(*STATE_COLS).unionByName(upto_p)
+                frames.append(
+                    dedup_latest(
+                        upto_p, keys=["image_id"], order_desc=_STATE_DEDUP_DESC
+                    ).select(F.lit(p).alias(scol), *STATE_COLS)
                 )
-            lineage.extend(records)
+            state_table.write(
+                functools.reduce(DataFrame.unionByName, frames),
+                mode="overwrite_partitions",
+                meta=state_meta,
+                partition_meta={p: {"features_key": keys[p]} for p in snaps},
+            )
+        if lineage is not None:
+            # per-partition context = every READY-or-in-span partition
+            # inside the rolling window BY DATE RANGE — a count-based
+            # [-ROLL_CTX_DAYS:] slice misstated the real inputs for
+            # early/mid-span partitions (round-4 review: it dropped
+            # pre-span context and included out-of-window neighbors when
+            # partition dates are sparse)
+            lineage.extend([
+                {
+                    "kind": "feature_update",
+                    "partition": part,
+                    "input_snapshot": snap.snapshot_id,
+                    "ctx_partitions": [
+                        q for q in (ready + list(span))
+                        if _date_minus(part, ROLL_CTX_DAYS) <= q < part
+                    ],
+                }
+                for part in span
+            ])
         processed.extend(span)
     return processed
 
@@ -645,8 +597,9 @@ def update_feature_table(
 def rows_decoded_total(feature_lineage: LineageLog) -> int:
     """Total image rows decoded across all runs — the decode-once
     invariant's observable (lineage-based, judge round-1 ask).  Counts
-    DECODE-stage records only: window-chain recomputes (backfills) don't
-    decode."""
+    DECODE records only: partitions whose window chain recomputes without
+    an input change (backfills of earlier days) read their decode columns
+    back instead of decoding."""
     return sum(
         r.get("rows_decoded", 0)
         for r in feature_lineage.records()
@@ -730,8 +683,8 @@ def materialize(
     test_batched_equals_per_date).  The write is the batch's one action.
     Lineage stays PER PARTITION and costs no job: ``rows_obs`` from the
     obs snapshot's counts, ``rows_out`` from the write's footers, and
-    ``watermark`` = the max ``max_event_time`` recorded by the state
-    commits of partitions ≤ D (max event_time over features ≤ D).
+    ``watermark`` = the max ``max_event_time`` recorded by the features
+    commits of partitions ≤ D (max event_time over features ≤ D, UTC).
 
     The feature/state tables default to hidden tables under the output
     table's directory; pass them explicitly to share one decoded feature
@@ -752,14 +705,8 @@ def materialize(
         spark, images_table, features_table, state_table,
         feature_lineage_for(features_table),
     )
-    feat_parts = (
-        features_table.partitions()
-        if features_table.current_snapshot() else []
-    )
-    s_info = (
-        state_table.partition_info()
-        if state_table.current_snapshot() else {}
-    )
+    f_info = features_table.partition_info()
+    feat_parts = features_table.partitions()
 
     obs_snap = obs_table.current_snapshot()
     obs_counts = obs_snap.partitions if obs_snap else {}
@@ -783,7 +730,7 @@ def materialize(
         frames = []
         carry_part = max((p for p in feat_parts if p < d1), default=None)
         if carry_part is not None:
-            carry = read_state_asof(spark, state_table, upto=carry_part)
+            carry = _state_asof(spark, state_table, features_table, carry_part)
             if carry is not None:
                 frames.append(carry)
         day_parts = [p for p in feat_parts if d1 <= p <= dn]
@@ -824,7 +771,7 @@ def materialize(
                 # str(datetime) is fixed-width up to an optional fraction,
                 # so the recorded max_event_time strings sort in time order
                 "watermark": max(
-                    (m["max_event_time"] for p, m in s_info.items()
+                    (m["max_event_time"] for p, m in f_info.items()
                      if p <= part and m.get("max_event_time") is not None),
                     default=None,
                 ),

@@ -293,16 +293,14 @@ class FeaturePipeline:
 
     def corpus_stats(self) -> DataFrame | None:
         """One-row corpus statistics (total rows, approx distinct
-        entities, decode-stat quantiles) resolved from the per-partition
-        sketch table the materializer maintains — no history re-scan at
-        any corpus size.  Written to ``corpus_stats.parquet`` under the
-        output root; None when no sketches exist yet."""
-        sk = default_sketch_table(
-            self.features_t, self.images_t.partition_col
-        )
-        if sk.current_snapshot() is None:
+        entities, decode-stat quantiles) resolved from per-partition
+        sketches, built on read for the feature partitions whose input
+        changed — no history re-scan at any corpus size.  Written to
+        ``corpus_stats.parquet`` under the output root; None when no
+        features exist yet."""
+        if self.features_t.current_snapshot() is None:
             return None
-        stats = corpus_feature_stats(self.spark, sk)
+        stats = corpus_feature_stats(self.spark, self.features_t)
         stats.coalesce(1).write.mode("overwrite").parquet(
             os.path.join(self.out, "corpus_stats.parquet")
         )
@@ -318,13 +316,10 @@ class FeaturePipeline:
         if not keep:
             return {}
         out = {}
-        sketches_t = default_sketch_table(
-            self.features_t, self.images_t.partition_col
-        )
         for name, table in (("features", self.features_t),
                             ("state", self.state_t),
                             ("offline", self.offline_t),
-                            ("sketches", sketches_t)):
+                            ("sketches", default_sketch_table(self.features_t))):
             if table.current_snapshot() is not None:
                 out[name] = table.expire_snapshots(keep_last=int(keep))
         return out

@@ -91,10 +91,10 @@ def stream_enrich_to_table(
 
     The state is RE-RESOLVED per micro-batch inside ``foreachBatch``
     (``read_state_asof`` reads the state table's current snapshot:
-    newest full snapshot partition + deltas after it), so features keep
-    up with the incremental materializer without restarting the query —
-    a stream-static join would freeze the state at the plan captured at
-    query start.  Partitioned by the observation date."""
+    newest valid snapshot partition + the feature partitions after it),
+    so features keep up with the incremental materializer without
+    restarting the query — a stream-static join would freeze the state at
+    the plan captured at query start.  Partitioned by the observation date."""
     from feature_store_spark.pipeline.materialize import read_state_asof
     from feature_store_spark.streaming.ingest import (
         committed_batch_ids,

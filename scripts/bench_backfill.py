@@ -1,5 +1,6 @@
-"""Backfill-cost benchmark: measured evidence for the round-3 materialize
-rework (decode/window split + delta state).
+"""Backfill-cost benchmark: measured evidence for the incremental
+materialize design (decode keyed by each partition's own input, state
+snapshots every Kth partition only).
 
 Scenario: build the incremental feature store over a multi-day image
 history, then backfill ONE early day (changed content) and bring the
@@ -7,10 +8,11 @@ store back up to date.
 
 What the old design cost (round-2 judge finding): the backfill re-DECODED
 every partition ≥ the changed one (decode and window state shared a
-table) and rewrote a full per-entity state snapshot per partition.  The
-new design re-decodes exactly the changed day and recomputes only the
-cheap numeric window chain forward; state writes are per-day deltas plus
-every-Kth snapshots.
+table) and rewrote a full per-entity state snapshot per partition.  Now
+the backfill re-decodes exactly the changed day, recomputes only the
+cheap numeric window chain forward (reading the other days' decode
+columns back from the features table), and writes state only at the
+every-Kth snapshot positions.
 
 Round 4 adds the MATERIALIZE loop figure: obs dates are processed
 ``batch_dates`` per Spark job (one as-of write per batch; the lineage
@@ -53,8 +55,8 @@ CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 WORK = os.path.join(REPO, "BENCH", "data", "backfill_work")
 SNAPSHOT_EVERY = 10
 # sparse-entity regime: daily actives ≪ total entities — the shape a
-# 10^9-entity production table has, and where per-day state deltas beat
-# per-day full snapshots (with dense daily activity they'd be equal)
+# 10^9-entity production table has, and where snapshots every Kth day
+# beat per-day full snapshots most
 N_IMAGES = 150_000
 N_ENTITIES = 50_000
 

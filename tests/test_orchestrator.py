@@ -223,8 +223,14 @@ def test_yaml_cli_front_door(spark, config, tmp_path, capsys):
 
 
 def test_corpus_stats_artifact(spark, config, ran):
-    """Round-5: run_all resolves corpus stats from the sketch table alone
-    and writes the one-row artifact; totals match the input corpus."""
+    """Round-5: run_all resolves corpus stats from per-partition sketches,
+    built on read from the features table (the update writes none), and
+    writes the one-row artifact; totals match the input corpus."""
+    from feature_store_spark.pipeline.materialize import default_sketch_table
+
+    pipe, _ = ran
+    sketches = default_sketch_table(pipe.features_t)
+    assert sketches.partitions() == pipe.features_t.partitions()
     stats = pd.read_parquet(
         os.path.join(config["output_path"], "corpus_stats.parquet")
     )

@@ -477,9 +477,9 @@ def test_incremental_materialize_recomputes_only_changed_dates(
 
 def test_stage_b_batching_equals_per_partition(spark, setup, tmp_path):
     """Round-4 stage-B batching: one span call of the window chain +
-    batched delta/snapshot state commit must equal partition-by-partition
-    processing — feature rows, per-partition state row counts, state
-    kinds, and any read_state_asof cut point."""
+    batched snapshot state commit must equal partition-by-partition
+    processing — feature rows, per-partition state row counts, the
+    snapshot partitions, and any read_state_asof cut point."""
     from feature_store_spark.pipeline.materialize import (
         read_state_asof,
         update_feature_table,
@@ -511,7 +511,7 @@ def test_stage_b_batching_equals_per_partition(spark, setup, tmp_path):
         out[tag] = (
             feats,
             dict(st.current_snapshot().partitions),
-            {p: st.partition_info()[p]["state_kind"] for p in st.partitions()},
+            st.partitions(),
             cut,
         )
     pd.testing.assert_frame_equal(out["one"][0], out["many"][0])
@@ -559,65 +559,121 @@ def test_expire_preserves_incremental_validity(spark, setup, tmp_path):
     assert read_state_asof(spark, state_t) is not None
 
 
+def _latest_rows(feats: pd.DataFrame, upto: str) -> pd.DataFrame:
+    """Brute force: each entity's latest feature row dated ≤ ``upto``
+    (event_time, then phash, then caption, as the state dedup orders)."""
+    vis = feats[feats.event_date <= upto]
+    return (
+        vis.sort_values(["event_time", "phash", "caption"], kind="stable")
+        .groupby("image_id").tail(1)
+        .drop(columns=["event_date"])
+        .sort_values("image_id").reset_index(drop=True)
+    )
+
+
+def _assert_state_cuts(spark, feats_t, state_t, parts):
+    """read_state_asof at every cut in ``parts`` equals the brute-force
+    latest row per entity over the features table."""
+    from feature_store_spark.pipeline.materialize import (
+        STATE_COLS,
+        read_state_asof,
+    )
+
+    feats = feats_t.read(spark).toPandas()
+    for p in parts:
+        got = (
+            read_state_asof(spark, state_t, upto=p).toPandas()[STATE_COLS]
+            .sort_values("image_id").reset_index(drop=True)
+        )
+        pd.testing.assert_frame_equal(
+            got, _latest_rows(feats, p)[STATE_COLS], obj=p,
+            check_dtype=False,  # a null-free cut reads lag_phash as int64
+        )
+
+
 def test_state_deltas_and_snapshots(spark, setup, tmp_path):
     """Round-2 judge finding: state wrote a FULL per-entity snapshot every
-    partition (O(P×|entities|) rows).  Now: delta partitions hold only the
-    entities seen that day, every Kth partition is a full snapshot, and
-    read_state_asof resolves snapshot+deltas to the exact latest row per
-    entity at any cut point."""
+    partition (O(P×|entities|) rows).  Now every Kth partition is a full
+    snapshot and nothing is written between (a per-day delta was the
+    dedup of that day's feature partition, which the resolution reads
+    directly).  read_state_asof resolves the newest valid snapshot + the
+    feature partitions after it to the exact latest row per entity at
+    every cut point — also after a crash that landed a span's features
+    commit but not its state snapshot, and after the update that
+    recomputes that span."""
     from feature_store_spark.pipeline.materialize import (
         feature_lineage_for,
-        read_state_asof,
+        rows_decoded_total,
         update_feature_table,
     )
 
     root, img_pdf, obs_pdf, images_t, obs_t = setup
     base = str(tmp_path)
+    parts = images_t.partitions()
+    k = (len(parts) - 2) // 3
+    head, tail = parts[:3 * k], parts[3 * k:]
+    assert k >= 2 and len(tail) == 2  # tail = one span, opened by a snapshot
     img4 = PartitionedTable(base, "images4", "event_date")
-    img4.write(spark.createDataFrame(img_pdf), mode="overwrite")
+    img4.write(spark.createDataFrame(img_pdf[img_pdf.event_date.isin(head)]),
+               mode="overwrite")
     feats_t = PartitionedTable(base, "feats4", "event_date")
     state_t = PartitionedTable(base, "state4", "event_date")
-    update_feature_table(spark, img4, feats_t, state_t,
-                         feature_lineage_for(feats_t),
-                         state_snapshot_every=3)
+    flin = feature_lineage_for(feats_t)
 
-    img_parts = img4.partitions()
-    info = state_t.partition_info()
+    def update():
+        return update_feature_table(spark, img4, feats_t, state_t, flin,
+                                    state_snapshot_every=3, batch_parts=2)
+
+    assert update() == head
+    assert state_t.partitions() == head[::3]
     counts = state_t.current_snapshot().partitions
-    for i, p in enumerate(img_parts):
-        kind = info[p]["state_kind"]
-        assert kind == ("snapshot" if i % 3 == 0 else "delta"), p
-        day = img_pdf[img_pdf.event_date == p]["image_id"].nunique()
+    for p in head[::3]:
         upto = img_pdf[img_pdf.event_date <= p]["image_id"].nunique()
-        assert counts[p] == (upto if kind == "snapshot" else day), p
+        assert counts[p] == upto, p
+    _assert_state_cuts(spark, feats_t, state_t, head)
 
-    # resolution at an arbitrary cut == brute-force latest row per entity
-    mid = img_parts[-2]
-    st = read_state_asof(spark, state_t, upto=mid).toPandas()
-    vis = img_pdf[img_pdf.event_date <= mid]
-    want = (
-        vis.sort_values(["event_time", "phash"], kind="stable")
-        .groupby("image_id").tail(1)
+    # the tail span's state write raises after its features commit landed
+    img4.write(spark.createDataFrame(img_pdf[img_pdf.event_date.isin(tail)]))
+    orig_write = state_t.write
+    state_t.write = lambda *a, **k: (_ for _ in ()).throw(
+        RuntimeError("simulated crash in the snapshot write")
     )
-    assert len(st) == vis["image_id"].nunique()
-    got_latest = dict(zip(st["image_id"], st["event_time"]))
-    want_latest = dict(zip(want["image_id"], want["event_time"]))
-    assert got_latest == want_latest
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        update()
+    state_t.write = orig_write
+    assert feats_t.partitions() == parts
+    assert state_t.partitions() == head[::3]
+    # the snapshot-less span resolves from the last valid snapshot + the
+    # feature partitions after it
+    _assert_state_cuts(spark, feats_t, state_t, parts)
+    assert rows_decoded_total(flin) == len(img_pdf)
+
+    assert update() == tail  # the crashed span recomputes...
+    assert rows_decoded_total(flin) == len(img_pdf)  # ...without re-decode
+    assert update() == []
+    assert state_t.partitions() == parts[::3]
+    _assert_state_cuts(spark, feats_t, state_t, parts)
 
 
-def test_state_commit_records_max_event_time(spark, setup, tmp_path):
-    """Each state commit records its partition's max ``event_time``,
+def test_features_commit_records_max_event_time(spark, setup, tmp_path):
+    """Each features commit records its partition's max ``event_time``,
     observed on the features write (materialize's watermark source).  A
-    state table committed before that field existed counts as stale: the
-    next update recomputes it once and records the field."""
+    features table committed before that field existed counts as stale:
+    the next update recomputes it once, re-decoding nothing, and records
+    the field."""
     import json
 
-    from feature_store_spark.pipeline.materialize import update_feature_table
+    from feature_store_spark.pipeline.materialize import (
+        feature_lineage_for,
+        rows_decoded_total,
+        update_feature_table,
+    )
 
     root, img_pdf, obs_pdf, images_t, obs_t = setup
     base = str(tmp_path)
     feats_t = PartitionedTable(base, "feats6", "event_date")
     state_t = PartitionedTable(base, "state6", "event_date")
+    flin = feature_lineage_for(feats_t)
     parts = images_t.partitions()
     want = {
         p: str(img_pdf.loc[img_pdf.event_date == p, "event_time"].max()
@@ -626,21 +682,184 @@ def test_state_commit_records_max_event_time(spark, setup, tmp_path):
     }
 
     def recorded():
-        info = state_t.partition_info()
+        info = feats_t.partition_info()
         return {p: info[p]["max_event_time"] for p in parts}
 
-    update_feature_table(spark, images_t, feats_t, state_t, batch_parts=4)
+    update_feature_table(spark, images_t, feats_t, state_t, flin,
+                         batch_parts=4)
     assert recorded() == want
+    n_decoded = rows_decoded_total(flin)
     # the same manifest as a commit made before the field existed
-    entries = state_t._read_manifest()
+    entries = feats_t._read_manifest()
     for e in entries:
         for m in e.get("partition_meta", {}).values():
             del m["max_event_time"]
-    with open(state_t._manifest_path, "w") as f:
+    with open(feats_t._manifest_path, "w") as f:
         f.writelines(json.dumps(e) + "\n" for e in entries)
-    assert update_feature_table(spark, images_t, feats_t, state_t) == parts
+    assert update_feature_table(spark, images_t, feats_t, state_t,
+                                flin) == parts
+    assert rows_decoded_total(flin) == n_decoded
     assert recorded() == want
     assert update_feature_table(spark, images_t, feats_t, state_t) == []
+
+
+def test_max_event_time_and_watermark_are_utc(spark, setup, tmp_path,
+                                              monkeypatch):
+    """``max_event_time`` and the lineage ``watermark`` are UTC wall
+    times whatever the driver's time zone: a driver in America/New_York
+    records what a UTC driver records (the session time zone is UTC, so
+    the images hold the naive input times as UTC instants)."""
+    import time
+
+    root, img_pdf, obs_pdf, images_t, obs_t = setup
+    base = str(tmp_path)
+    parts = images_t.partitions()
+    max_ts = {
+        p: str(img_pdf.loc[img_pdf.event_date == p, "event_time"].max()
+               .to_pydatetime())
+        for p in parts
+    }
+    feats_t = PartitionedTable(base, "feats", "event_date")
+    lin = LineageLog(f"{base}/_lineage.jsonl")
+    try:
+        with monkeypatch.context() as m:
+            m.setenv("TZ", "America/New_York")
+            time.tzset()
+            assert time.localtime(0).tm_hour == 19  # the zone took effect
+            materialize(
+                spark, images_t, obs_t,
+                PartitionedTable(base, "out", "obs_date"),
+                CheckpointManifest(f"{base}/_ckpt.jsonl"), lin,
+                features_table=feats_t,
+                state_table=PartitionedTable(base, "state", "event_date"),
+            )
+    finally:
+        time.tzset()
+    recs = lin.records()
+    assert len(recs) == len(obs_t.partitions())
+    for r in recs:
+        seen = [max_ts[p] for p in parts if p <= r["partition"]]
+        assert r["watermark"] == (max(seen) if seen else None), r
+    info = feats_t.partition_info()
+    assert {p: info[p]["max_event_time"] for p in parts} == max_ts
+
+
+def _as_previous_layout(spark, img_t, feats_t, state_t, every=10):
+    """Rewrite freshly built tables into the layout of the previous
+    version: features commits keyed by ``decoded_dirs`` without
+    ``max_event_time``, a ``_decoded`` table of the decode columns next
+    to them, and a state table of per-day DELTAS (each entity's latest
+    row that day) with a full snapshot every ``every``-th partition,
+    whose commits carry ``max_event_time`` and name no features table."""
+    import json
+    import shutil
+
+    import pyspark.sql.functions as F
+
+    from feature_store_spark.operators.windows import dedup_latest
+    from feature_store_spark.pipeline.materialize import (
+        DECODE_COLS,
+        STATE_COLS,
+    )
+
+    parts = img_t.partitions()
+    input_dirs = {p: sorted(d) for p, d in img_t.current_snapshot().mapping.items()}
+    feats = feats_t.read(spark)
+    dec_t = PartitionedTable(feats_t.path, "_decoded", "event_date")
+    dec = dec_t.write(
+        feats.select("image_id", "event_time", *DECODE_COLS, "event_date"),
+        partition_meta={p: {"input_dirs": input_dirs[p]} for p in parts},
+    )
+    decoded_dirs = {p: sorted(d) for p, d in dec.mapping.items()}
+    max_ts = {p: feats_t.partition_info()[p]["max_event_time"] for p in parts}
+    entries = feats_t._read_manifest()
+    for e in entries:
+        for p, m in e.get("partition_meta", {}).items():
+            del m["max_event_time"]
+            m["decoded_dirs"] = decoded_dirs[p]
+    with open(feats_t._manifest_path, "w") as f:
+        f.writelines(json.dumps(e) + "\n" for e in entries)
+
+    shutil.rmtree(state_t.path)
+    frames, kinds = [], {}
+    for i, p in enumerate(parts):
+        kinds[p] = "delta" if i % every else "snapshot"
+        rows = feats.where(
+            F.col("event_date") == p if i % every
+            else F.col("event_date") <= p
+        )
+        frames.append(
+            dedup_latest(rows, keys=["image_id"],
+                         order_desc=["event_time", "phash", "caption"])
+            .select(F.lit(p).alias("event_date"), *STATE_COLS)
+        )
+    state = frames[0]
+    for f in frames[1:]:
+        state = state.unionByName(f)
+    state_t.write(state, partition_meta={
+        p: {"decoded_dirs": decoded_dirs[p], "input_dirs": input_dirs[p],
+            "state_kind": kinds[p], "max_event_time": max_ts[p]}
+        for p in parts
+    })
+    return [p for p in parts if kinds[p] == "delta"]
+
+
+def test_previous_layout_upgrades_once(spark, setup, tmp_path):
+    """Tables written by the previous version (a ``_decoded`` table,
+    per-day state deltas, ``max_event_time`` on the state commits)
+    upgrade on their first update: the window chain recomputes once,
+    nothing re-decodes, no legacy delta row is read afterwards, and the
+    features and every state cut equal a fresh build's."""
+    from feature_store_spark.pipeline.materialize import (
+        feature_lineage_for,
+        read_state_asof,
+        rows_decoded_total,
+        update_feature_table,
+    )
+
+    root, img_pdf, obs_pdf, images_t, obs_t = setup
+    base = str(tmp_path)
+    parts = images_t.partitions()
+    tables = {}
+    for tag in ("fresh", "old"):
+        ft = PartitionedTable(base, f"feats_{tag}", "event_date")
+        st = PartitionedTable(base, f"state_{tag}", "event_date")
+        flin = feature_lineage_for(ft)
+        assert update_feature_table(spark, images_t, ft, st, flin) == parts
+        tables[tag] = (ft, st, flin)
+    ft, st, flin = tables["old"]
+    deltas = _as_previous_layout(spark, images_t, ft, st)
+    assert deltas and set(deltas) <= set(st.partitions())
+    n_decoded = rows_decoded_total(flin)
+
+    assert update_feature_table(spark, images_t, ft, st, flin) == parts
+    assert rows_decoded_total(flin) == n_decoded
+    assert update_feature_table(spark, images_t, ft, st, flin) == []
+
+    read = []
+    orig_read = st.read
+
+    def spy(spark, partitions=None, **kw):
+        read.extend(partitions if partitions is not None else st.partitions())
+        return orig_read(spark, partitions=partitions, **kw)
+
+    st.read = spy
+    key = ["image_id", "event_time", "phash"]
+    fresh_f, fresh_s, _ = tables["fresh"]
+    pd.testing.assert_frame_equal(
+        ft.read(spark).toPandas().sort_values(key).reset_index(drop=True),
+        fresh_f.read(spark).toPandas().sort_values(key).reset_index(drop=True),
+    )
+    for p in parts:
+        pd.testing.assert_frame_equal(
+            read_state_asof(spark, st, upto=p).toPandas()
+            .sort_values("image_id").reset_index(drop=True),
+            read_state_asof(spark, fresh_s, upto=p).toPandas()
+            .sort_values("image_id").reset_index(drop=True),
+            obj=p,
+        )
+    _assert_state_cuts(spark, ft, st, parts)
+    assert read and not set(read) & set(deltas)
 
 
 def test_crash_between_feature_and_state_commit_recovers(spark, setup, tmp_path):

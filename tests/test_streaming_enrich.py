@@ -85,24 +85,36 @@ def test_enrich_lookback_expiry(spark, state_pdf):
     assert pd.isna(got.loc["stale", "phash"])  # 4.5h old > 2h window
 
 
-def test_stream_enrich_exactly_once_with_state_refresh(spark, tmp_path,
-                                                       state_pdf):
+def test_stream_enrich_exactly_once_with_state_refresh(spark, tmp_path):
+    """Each micro-batch re-resolves the state the incremental update
+    maintains: a new day landed between two batches (a feature partition
+    and no state write, as on any day between snapshots) is served to the
+    second batch without restarting the query, and every batch commits
+    exactly once."""
+    from feature_store_spark.pipeline.datagen import generate_images
+    from feature_store_spark.pipeline.materialize import (
+        read_state_asof,
+        update_feature_table,
+    )
+
+    img = generate_images(n_rows=60, n_entities=3, seed=5)
+    img["event_date"] = img["event_time"].dt.strftime("%Y-%m-%d")
+    days = sorted(img["event_date"].unique())
+    last = days[-1]
+    fresh = img[img.event_date == last]
+    ent = fresh["image_id"].iloc[0]
+    root = str(tmp_path)
+    images_t = PartitionedTable(root, "images", "event_date")
+    feats_t = PartitionedTable(root, "features", "event_date")
+    state_t = PartitionedTable(root, "state", "event_date")
+    images_t.write(spark.createDataFrame(img[img.event_date < last]),
+                   mode="overwrite")
+    update_feature_table(spark, images_t, feats_t, state_t)
+
     src = str(tmp_path / "obs_in")
     os.makedirs(src)
-    state_t = PartitionedTable(str(tmp_path), "state", "event_date")
-    out_t = PartitionedTable(str(tmp_path), "enriched", "obs_date")
+    out_t = PartitionedTable(root, "enriched", "obs_date")
     ckpt = str(tmp_path / "ckpt")
-
-    s1 = state_pdf.assign(
-        event_date=state_pdf["event_time"].dt.strftime("%Y-%m-%d"),
-        session_id_idx=0,
-    )
-    state_t.write(
-        spark.createDataFrame(s1), mode="overwrite",
-        partition_meta={d: {"state_kind": "snapshot"}
-                        for d in s1["event_date"].unique()},
-    )
-
     n_files = 0
 
     def drain(files):
@@ -116,32 +128,39 @@ def test_stream_enrich_exactly_once_with_state_refresh(spark, tmp_path,
         )
         q.awaitTermination(120)
 
-    obs1 = pd.DataFrame(
-        {"image_id": ["a", "b"], "obs_id": ["o1", "o2"],
-         "obs_time": [_ts("10:30"), _ts("11:30")]}
-    )
+    def served(obs_pdf):
+        """What enrich_with_state serves over the state resolved now."""
+        return enrich_with_state(
+            spark.createDataFrame(obs_pdf, _OBS_SCHEMA),
+            read_state_asof(spark, state_t), feature_cols=["phash", "mean_r"],
+        ).toPandas().set_index("obs_id")
+
+    eod = pd.Timestamp(last) + pd.Timedelta(hours=23, minutes=59)
+    ents = sorted(img["image_id"].unique())
+    obs1 = pd.DataFrame({"image_id": ents,
+                         "obs_id": [f"o{i}" for i in range(len(ents))],
+                         "obs_time": [pd.Timestamp(last)] * len(ents)})
     drain([obs1])
     got = out_t.read(spark).toPandas().set_index("obs_id")
-    assert len(got) == 2 and got.loc["o1", "phash"] == 11
+    assert len(got) == len(ents)
+    want = served(obs1)
+    assert got.loc[want.index, "phash"].tolist() == want["phash"].tolist()
+    before = got.set_index("image_id").loc[ent, "feature_ts"]
 
-    # state advances (entity a gets a newer feature) before batch 2:
-    # the NEW state must be visible without restarting the pipeline
-    s2 = pd.DataFrame(
-        {"image_id": ["a"], "event_time": [_ts("13:00")], "phash": [99],
-         "mean_r": [0.9], "caption": ["ca2"]}
-    ).assign(event_date="2024-01-01", session_id_idx=0)
-    state_t.write(spark.createDataFrame(s2), mode="overwrite_partitions",
-                  partition_meta={"2024-01-01": {"state_kind": "snapshot"}})
-
-    obs2 = pd.DataFrame(
-        {"image_id": ["a"], "obs_id": ["o3"], "obs_time": [_ts("13:30")]}
-    )
+    # a new day lands before batch 2: the NEW features must be visible
+    # without restarting the pipeline
+    images_t.write(spark.createDataFrame(fresh))
+    assert update_feature_table(spark, images_t, feats_t, state_t) == [last]
+    obs2 = pd.DataFrame({"image_id": [ent], "obs_id": ["late"],
+                         "obs_time": [eod]})
     drain([obs2])
     got = out_t.read(spark).toPandas().set_index("obs_id").sort_index()
-    assert len(got) == 3                      # exactly-once: no o1/o2 dupes
-    assert got.loc["o3", "phash"] == 99       # refreshed state served
+    assert len(got) == len(ents) + 1          # exactly-once: no dupes
+    assert got.loc["late", "feature_ts"] == fresh.loc[
+        fresh.image_id == ent, "event_time"].max() > before
+    assert got.loc["late", "phash"] == served(obs2).loc["late", "phash"]
     assert (got["feature_ts"].dropna() <= got.loc[
         got["feature_ts"].notna(), "obs_time"]).all()
     # restarting the drained query with no new files appends nothing
     drain([])
-    assert len(out_t.read(spark).toPandas()) == 3
+    assert out_t.read(spark).count() == len(ents) + 1

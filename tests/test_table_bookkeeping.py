@@ -100,9 +100,11 @@ def test_empty_partition_read_uses_recorded_schema(spark, tmp_path):
 
 
 def test_one_new_date_materialize_job_count(spark, tmp_path):
-    """A new day's incremental materialize runs a pinned number of Spark
-    jobs, so an added per-batch job (a skew probe, a second carry over
-    the state rows) shows up as a count change."""
+    """A new day's update and incremental materialize run a pinned number
+    of Spark jobs, so an added per-batch job (a skew probe, a second carry
+    over the state rows, a side table written per day) shows up as a
+    count change.  The new day is not a snapshot position: its update
+    writes the features table alone."""
     from feature_store_spark.pipeline.datagen import (
         generate_images,
         generate_observations,
@@ -141,11 +143,16 @@ def test_one_new_date_materialize_job_count(spark, tmp_path):
     obs_t.write(spark.createDataFrame(obs[obs.obs_date < new]),
                 mode="overwrite")
     run()
+    state_commits = len(state_t._read_manifest())
     images_t.write(spark.createDataFrame(img[img.event_date == new]))
     obs_t.write(spark.createDataFrame(obs[obs.obs_date == new]))
     (updated, n_update), (done, n) = run()
     assert updated == [new]
-    assert n_update == 8, f"one-new-date update ran {n_update} jobs, want 8"
+    assert n_update == 3, f"one-new-date update ran {n_update} jobs, want 3"
+    # the update's one table: no state commit, no side table
+    assert len(state_t._read_manifest()) == state_commits
+    assert sorted(os.listdir(feats_t.path)) == [
+        "_lineage.jsonl", "_manifest.jsonl", "data"]
     assert done == [new]
     assert n == 3, f"one-new-date materialize ran {n} jobs, want 3"
 
@@ -165,9 +172,10 @@ def engine_tables(spark, tmp_path_factory):
     from feature_store_spark.pipeline.materialize import (
         CheckpointManifest,
         LineageLog,
-        default_decoded_table,
+        corpus_feature_stats,
         default_sketch_table,
         materialize,
+        update_feature_table,
     )
 
     root = str(tmp_path_factory.mktemp("engine_tables"))
@@ -186,8 +194,12 @@ def engine_tables(spark, tmp_path_factory):
     lin = LineageLog(os.path.join(root, "_lineage.jsonl"))
 
     def run():
+        # a snapshot every 2nd day, so a backfill rewrites the state too
+        update_feature_table(spark, images_t, feats_t, state_t,
+                             state_snapshot_every=2)
         materialize(spark, images_t, obs_t, out_t, ckpt, lin,
                     features_table=feats_t, state_table=state_t)
+        corpus_feature_stats(spark, feats_t)  # sketches are built on read
 
     images_t.write(spark.createDataFrame(img[img.event_date < days[-1]]),
                    mode="overwrite")
@@ -200,17 +212,14 @@ def engine_tables(spark, tmp_path_factory):
     run()
     return {
         "images": images_t,
-        "decoded": default_decoded_table(feats_t, "event_date"),
-        "sketches": default_sketch_table(feats_t, "event_date"),
+        "sketches": default_sketch_table(feats_t),
         "features": feats_t,
         "state": state_t,
         "pit": out_t,
     }
 
 
-@pytest.mark.parametrize(
-    "name", ["decoded", "sketches", "features", "state", "pit"]
-)
+@pytest.mark.parametrize("name", ["sketches", "features", "state", "pit"])
 def test_engine_table_recorded_read_equals_merge_schema_read(
     spark, engine_tables, monkeypatch, name
 ):
