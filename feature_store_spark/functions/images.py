@@ -11,8 +11,10 @@ is production-shaped.
 
 Reference parity: the reference's only scalar UDF is row-wise ``unidecode``
 (``featurestore/preprocess/item_feature_preprocessing.py:182-185``); per
-BASELINE.json input_hint our engine bans per-row Python, so every function
-here is a pandas UDF over Arrow batches (Series → Series / DataFrame).
+BASELINE.json input_hint our engine bans per-row Python, so the two Spark
+UDFs here (decode, resize) are Arrow UDFs over ``pa.Array`` batches: the
+payloads are read zero-copy from the binary array's buffers and the output
+is built from numpy columns, with no pandas on the path.
 """
 
 from __future__ import annotations
@@ -20,7 +22,7 @@ from __future__ import annotations
 import zlib
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 import pyspark.sql.functions as F
 import pyspark.sql.types as T
 from pyspark.sql import Column
@@ -48,9 +50,10 @@ def encode_image(pixels: np.ndarray, fmt: str) -> bytes:
     raise NotImplementedError(f"unknown format {fmt!r}")
 
 
-def decode_image(data: bytes) -> np.ndarray:
-    """Decode bytes produced by :func:`encode_image` back to HxWx3 uint8."""
-    magic, header, payload = data[:4], data[4:8], data[8:]
+def decode_image(data) -> np.ndarray:
+    """Decode bytes (or a bytes-like view) produced by :func:`encode_image`
+    back to HxWx3 uint8."""
+    magic, header, payload = bytes(data[:4]), data[4:8], data[8:]
     w, h = np.frombuffer(header, dtype="<u2")
     raw = np.frombuffer(zlib.decompress(payload), dtype=np.uint8)
     arr = raw.reshape(int(h), int(w), 3)
@@ -108,7 +111,7 @@ def phash64(pixels: np.ndarray) -> int:
 
     Luma → nearest-neighbor 32x32 resize → 2D DCT-II → top-left 8x8 minus DC
     → bit i set iff coeff > median.  Deterministic; shared by the engine's
-    pandas UDF and the pandas oracle.
+    Arrow UDF and the pandas oracle.
 
     Hot-path notes (bit-exact rewrites of the obvious formulation,
     verified value-identical): luma is computed AFTER the subsample
@@ -202,60 +205,55 @@ IMAGE_FEATURES_SCHEMA = T.StructType(
 )
 
 
-def _features_batch(data: pd.Series, tolerant: bool) -> pd.DataFrame:
+def _payloads(data: pa.Array):
+    """(row, payload) for each non-null row of a ``binary`` or
+    ``large_binary`` array.  Each payload is a zero-copy memoryview into
+    the data buffer, cut at the offsets buffer (read from ``data.offset``,
+    so sliced arrays work)."""
+    rows = np.flatnonzero(data.is_valid().to_numpy(zero_copy_only=False))
+    if rows.size == 0:
+        return
+    _, offsets, values = data.buffers()
+    width = 8 if pa.types.is_large_binary(data.type) else 4
+    off = np.frombuffer(offsets, dtype=f"<i{width}", count=len(data) + 1,
+                        offset=data.offset * width)
+    view = memoryview(values if values is not None else b"")
+    for i in rows:
+        yield i, view[off[i]:off[i + 1]]
+
+
+def _features_batch(data: pa.Array) -> pa.StructArray:
     # Per-row work is ONLY what cannot batch (zlib decode, per-image
     # stats over variable dims); the pHash pipeline is collected into one
     # (n, 32, 32, 3) stack and hashed by :func:`phash64_batch` — same
     # bits, one numpy dispatch per batch instead of ~12 per row.
     n = len(data)
-    out = {name: [None] * n for name in IMAGE_FEATURES_SCHEMA.fieldNames()}
+    valid = np.zeros(n, dtype=bool)
+    dims = np.zeros((2, n), dtype=np.int32)
+    stats = np.zeros((6, n))
     stack = np.empty((n, _PHASH_RESIZE, _PHASH_RESIZE, 3), dtype=np.uint8)
-    valid: list[int] = []
-    for i, buf in enumerate(data):
-        px = None
-        if buf is not None:
-            if tolerant:
-                try:
-                    px = decode_image(bytes(buf))
-                except Exception:
-                    px = None  # corrupt payload → null features, keep the row
-            else:
-                px = decode_image(bytes(buf))
-        if px is None:
-            continue
+    for i, buf in _payloads(data):
+        px = decode_image(buf)
         h, w = px.shape[:2]
         ri, ci = _subsample_idx(h, w)
-        stack[len(valid)] = px[np.ix_(ri, ci)]
-        valid.append(i)
-        stats = decode_stats(px)
-        out["dec_h"][i] = h
-        out["dec_w"][i] = w
-        for name, val in zip(
-            ("mean_r", "mean_g", "mean_b", "std_r", "std_g", "std_b"), stats
-        ):
-            out[name][i] = val
-    if valid:
-        hashes = phash64_batch(stack[: len(valid)])
-        ph = out["phash"]
-        for j, i in enumerate(valid):
-            ph[i] = int(hashes[j])
-    return pd.DataFrame(out)
+        stack[i] = px[np.ix_(ri, ci)]
+        dims[:, i] = w, h
+        stats[:, i] = decode_stats(px)
+        valid[i] = True
+    phash = np.zeros(n, dtype=np.int64)
+    phash[valid] = phash64_batch(stack[valid]).astype(np.int64)
+    return pa.StructArray.from_arrays(
+        [pa.array(c, mask=~valid) for c in (phash, *dims, *stats)],
+        names=IMAGE_FEATURES_SCHEMA.fieldNames(),
+    )
 
 
-@F.pandas_udf(IMAGE_FEATURES_SCHEMA)
-def image_features_udf(data: pd.Series) -> pd.DataFrame:
-    """bytes → (phash, w, h, per-channel mean/std). One Arrow batch per call.
-    Strict: corrupt payloads abort the job (loud by default)."""
-    return _features_batch(data, tolerant=False)
-
-
-@F.pandas_udf(IMAGE_FEATURES_SCHEMA)
-def image_features_tolerant_udf(data: pd.Series) -> pd.DataFrame:
-    """Like :func:`image_features_udf` but corrupt payloads yield null
-    features instead of failing the task — the right default for web-scale
-    corpora where a few broken blobs must not kill a 10^12-row job; count
-    the nulls downstream for data-quality lineage."""
-    return _features_batch(data, tolerant=True)
+@F.arrow_udf(IMAGE_FEATURES_SCHEMA)
+def image_features_udf(data: pa.Array) -> pa.Array:
+    """bytes → (phash, w, h, per-channel mean/std). One Arrow batch per
+    call.  A null payload gives null features; a corrupt one fails the
+    task."""
+    return _features_batch(data)
 
 
 def resize_nn(pixels: np.ndarray, out_w: int, out_h: int) -> np.ndarray:
@@ -276,66 +274,52 @@ RESIZED_SCHEMA = T.StructType(
 )
 
 
-def resize_udf(out_w: int, out_h: int, fmt: str = "png"):
-    """Factory: Arrow-batched UDF decoding each payload, nearest-neighbor
-    resizing to (out_w, out_h), and re-encoding as ``fmt``."""
+def resize_udf(out_w: int, out_h: int):
+    """Factory: Arrow UDF decoding each payload, nearest-neighbor
+    resizing to (out_w, out_h), and re-encoding as png."""
 
-    @F.pandas_udf(RESIZED_SCHEMA)
-    def _resize(data: pd.Series) -> pd.DataFrame:
-        out = {"bytes": [], "w": [], "h": []}
-        for buf in data:
-            if buf is None:
-                out["bytes"].append(None)
-                out["w"].append(None)
-                out["h"].append(None)
-                continue
-            small = resize_nn(decode_image(bytes(buf)), out_w, out_h)
-            out["bytes"].append(encode_image(small, fmt))
-            out["w"].append(out_w)
-            out["h"].append(out_h)
-        return pd.DataFrame(out)
+    @F.arrow_udf(RESIZED_SCHEMA)
+    def _resize(data: pa.Array) -> pa.Array:
+        out = [None] * len(data)
+        for i, buf in _payloads(data):
+            out[i] = encode_image(
+                resize_nn(decode_image(buf), out_w, out_h), "png")
+        null = data.is_null().to_numpy(zero_copy_only=False)
+        return pa.StructArray.from_arrays(
+            [pa.array(out, pa.binary()),
+             pa.array(np.full(len(data), out_w, np.int32), mask=null),
+             pa.array(np.full(len(data), out_h, np.int32), mask=null)],
+            names=RESIZED_SCHEMA.fieldNames(),
+        )
 
     return _resize
 
 
-def with_resized_images(df, out_w: int, out_h: int, fmt: str = "png",
-                        bytes_col: str = "bytes"):
-    """Replace the image payload with a (out_w x out_h) thumbnail —
+def with_resized_images(df, out_w: int, out_h: int):
+    """Replace the ``bytes`` payload with a (out_w x out_h) png thumbnail —
     decode → resize → re-encode in one Arrow-batched map stage (the
     training-data "resize" transform).  Output bytes REPLACE the input
     column in place, so the no-bytes-through-shuffles contract is the
     caller's as before: resize in the scan stage, write or feature-extract
     before any wide operator."""
-    u = resize_udf(out_w, out_h, fmt)
-    keep = [c for c in df.columns if c not in (bytes_col, "w", "h")]
-    return df.withColumn("__r", u(F.col(bytes_col))).select(
-        *keep,
-        F.col("__r.bytes").alias(bytes_col),
-        F.col("__r.w").alias("w"),
-        F.col("__r.h").alias("h"),
-    )
+    u = resize_udf(out_w, out_h)
+    keep = [c for c in df.columns if c not in RESIZED_SCHEMA.fieldNames()]
+    return df.withColumn("__r", u(F.col("bytes"))).select(*keep, "__r.*")
 
 
-def with_image_features(df, bytes_col: str = "bytes", out_col: str = "img",
-                        on_error: str = "fail"):
-    """Attach the decoded feature struct and DROP the binary payload.
+def with_image_features(df):
+    """Attach the decoded feature struct and DROP the ``bytes`` payload.
 
-    ``on_error``: "fail" (default — corrupt bytes abort loudly) or "null"
-    (corrupt bytes yield null features; rows are preserved so the
-    row-preservation lineage invariant still holds).
-
-    Decoded fields REPLACE same-named input columns (e.g. the stored
-    ``phash`` is re-derived from bytes).  Projecting bytes away before any
-    shuffle is the single most important scale decision for a 10^12-image
-    table: joins and windows downstream move ~72 bytes of numeric features
-    per row, not megabyte blobs.
+    A null payload gives null features (the row is kept); a corrupt one
+    fails the task.  Decoded fields REPLACE same-named input columns (e.g.
+    the stored ``phash`` is re-derived from bytes).  Projecting bytes away
+    before any shuffle is the single most important scale decision for a
+    10^12-image table: joins and windows downstream move ~72 bytes of
+    numeric features per row, not megabyte blobs.
     """
-    if on_error not in ("fail", "null"):
-        raise ValueError(f"on_error must be 'fail' or 'null', got {on_error!r}")
-    udf = image_features_udf if on_error == "fail" else image_features_tolerant_udf
     struct_fields = set(IMAGE_FEATURES_SCHEMA.fieldNames())
-    keep = [c for c in df.columns if c != bytes_col and c not in struct_fields]
+    keep = [c for c in df.columns if c != "bytes" and c not in struct_fields]
     return (
-        df.withColumn(out_col, udf(F.col(bytes_col)))
-        .select(*keep, f"{out_col}.*")
+        df.withColumn("img", image_features_udf(F.col("bytes")))
+        .select(*keep, "img.*")
     )

@@ -14,6 +14,7 @@ from __future__ import annotations
 import warnings
 
 import pyspark.sql.functions as F
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Window
 
 
@@ -187,7 +188,10 @@ def lsh_candidate_pairs_with_stats(
     )
     from feature_store_spark.operators.caches import register_cache
 
-    eb = eb.persist()
+    # Serialized (blocks held as bytes, not JVM objects): less heap and GC
+    # for a frame that grows as ids x bands; blocks that do not fit spill
+    # to disk instead of being recomputed.
+    eb = eb.persist(StorageLevel.MEMORY_AND_DISK)
     register_cache(eb)
     if max_bucket_size is not None:
         w = Window.partitionBy("bucket").orderBy(

@@ -303,7 +303,7 @@ def infer(
             feat_cols = [c for c in got.columns if c != "__store_key"]
             # cold-start = key ABSENT from the store (membership test) —
             # NOT "first feature column is NaN": a present key whose first
-            # feature is legitimately NULL (tolerant-decode null, expired
+            # feature is legitimately NULL (a null image payload, expired
             # latest window) must keep its other stored values instead of
             # being silently default-filled (round-3 judge finding)
             miss = ~out["__store_key"].isin(got["__store_key"])

@@ -42,8 +42,9 @@ Assumes daily event-date partitioning (partition value = "YYYY-MM-DD" of
 Lifecycle per observation-date partition D:
   1. skip if the checkpoint manifest already records D under its current
      CONTENT key (:func:`materialize_keys`): the obs version dirs of D,
-     the feature and state version dirs of every partition ≤ D, and the
-     lookback — everything D's output reads.  A new day recomputes only
+     the feature version dirs of every partition ≤ D, and the lookback —
+     everything D's output reads (a state snapshot is read only while it
+     matches the feature dirs at or before it).  A new day recomputes only
      itself; a backfill of day b recomputes exactly the dates ≥ b, whose
      feature partitions the window chain rewrote.
   2. assemble state@<D ∪ features@D (manifest-pruned reads, no listing)
@@ -614,24 +615,22 @@ def feature_lineage_for(features_table: PartitionedTable) -> LineageLog:
 def materialize_keys(
     obs_table: PartitionedTable,
     features_table: PartitionedTable,
-    state_table: PartitionedTable,
     lookback: str | None,
 ) -> dict[str, str]:
     """Content key per obs-date partition D: a digest of D's obs version
-    dirs, the feature and state version dirs of every partition ≤ D, and
+    dirs, the feature version dirs of every partition ≤ D, and
     ``lookback``.  Dirs are immutable and every commit writes new ones, so
-    equal keys mean equal as-of output for D.  One running hash over the
-    sorted history keeps this O(partitions) for the whole table."""
+    equal keys mean equal as-of output for D.  The state table's dirs are
+    not part of it: a state snapshot is read only while its
+    ``features_key`` matches the feature dirs at or before it, so the
+    feature dirs already decide every as-of input.  One running hash over
+    the sorted history keeps this O(partitions) for the whole table."""
 
     def dirs(t: PartitionedTable) -> list[tuple[str, list[str]]]:
         snap = t.current_snapshot()
         return sorted(snap.mapping.items()) if snap else []
 
-    history = sorted(
-        (p, name, sorted(d))
-        for name, t in (("features", features_table), ("state", state_table))
-        for p, d in dirs(t)
-    )
+    history = [(p, sorted(d)) for p, d in dirs(features_table)]
     h = hashlib.sha256(json.dumps(lookback).encode())
     keys, i = {}, 0
     for part, obs_dirs in dirs(obs_table):
@@ -711,7 +710,7 @@ def materialize(
     obs_snap = obs_table.current_snapshot()
     obs_counts = obs_snap.partitions if obs_snap else {}
     obs_parts = sorted(obs_counts)
-    keys = materialize_keys(obs_table, features_table, state_table, lookback)
+    keys = materialize_keys(obs_table, features_table, lookback)
     if dates is None:
         done = checkpoint.done_partitions(keys)
         todo = [p for p in obs_parts if p not in done]

@@ -27,7 +27,8 @@ _DEFAULTS: dict[str, str] = {
     # local tests to cluster scale instead of pinning either (round-6;
     # guide §2.2 "fewer, larger partitions").
     "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
-    # Arrow transfer for every pandas UDF (decode / phash path).
+    # Arrow for toPandas/createDataFrame; the batch size is also the rows
+    # per call of every Arrow UDF (image decode and resize).
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     "spark.sql.execution.arrow.maxRecordsPerBatch": "2048",
     # Binary image payloads are wide rows: keep input splits moderate.

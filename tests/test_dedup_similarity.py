@@ -111,6 +111,24 @@ def test_lsh_bucket_cache_scoping(spark, boilerplate_docs):
     assert release_caches() == 1 and not caches_mod._GLOBAL_CACHES
 
 
+def test_lsh_bucket_cache_storage_level(spark, boilerplate_docs):
+    """The bucket membership cache is persisted at an explicit serialized
+    MEMORY_AND_DISK, not the deserialized DataFrame default."""
+    from pyspark import StorageLevel
+
+    from feature_store_spark.operators.caches import cache_scope
+
+    sigs = minhash_signatures(boilerplate_docs, num_hashes=6)
+    with cache_scope() as scope:
+        pairs, _ = lsh_candidate_pairs_with_stats(
+            sigs, num_hashes=6, band_size=3, max_bucket_size=10)
+        pairs.count()
+        assert len(scope) == 1
+        level = scope[0].storageLevel
+    assert level == StorageLevel.MEMORY_AND_DISK
+    assert not level.deserialized and level.useDisk
+
+
 def test_partial_topk_equals_full_shuffle(spark, vectors):
     """The map-side pre-reduce is exact: identical result to the plain
     full-shuffle window rank, at any input partitioning."""

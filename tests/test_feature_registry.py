@@ -199,7 +199,7 @@ def test_materialize_latest_and_infer(spark, frames, registry, tmp_path):
 def test_infer_present_key_with_null_first_feature(spark, tmp_path):
     """Cold-start detection is key MEMBERSHIP, not first-feature NaN
     (round-3 judge finding): a key that IS in the store but whose first
-    feature column is legitimately NULL (tolerant-decode null, expired
+    feature column is legitimately NULL (a null image payload, expired
     latest window) keeps its other stored values — it must not be
     silently overwritten with the sentinel defaults."""
     latest = spark.createDataFrame(

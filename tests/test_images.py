@@ -75,29 +75,32 @@ def test_spark_decode_matches_oracle(spark):
     assert (got["dec_h"].to_numpy() == got["h"].to_numpy()).all()
 
 
-def test_tolerant_decode_nulls_corrupt_rows(spark):
-    """on_error='null': corrupt payloads become null features, rows kept."""
-    import pandas as pd
-
-    good = generate_images(n_rows=5, n_entities=2, seed=9)
+def test_null_payload_gives_null_features_corrupt_fails(spark):
+    """A null payload keeps its row with null features and leaves every
+    other row of its Arrow batch exact (a 63-bit phash must not pass
+    through a float column); a corrupt payload fails the task."""
+    good = generate_images(n_rows=6, n_entities=2, seed=9)
     rows = pd.DataFrame(
         {
-            "image_id": list(good["image_id"]) + ["bad"],
-            "bytes": list(good["bytes"]) + [b"garbage-not-an-image"],
+            "image_id": list(good["image_id"]) + ["null"],
+            "bytes": list(good["bytes"]) + [None],
             "event_time": list(good["event_time"]) + [good["event_time"].iloc[0]],
         }
     )
     out = with_image_features(
-        spark.createDataFrame(rows), on_error="null"
-    ).toPandas()
-    assert len(out) == 6  # row preservation
-    bad = out[out.image_id == "bad"].iloc[0]
-    assert pd.isna(bad["phash"]) and pd.isna(bad["mean_r"])
-    ok = out[out.image_id != "bad"]
-    assert ok["phash"].notna().all()
-    # strict mode still fails loudly
+        spark.createDataFrame(rows).coalesce(1)
+    ).collect()
+    assert len(out) == 7  # row preservation
+    by_id = {}
+    for r in out:
+        by_id.setdefault(r["image_id"], []).append(r)
+    null = by_id.pop("null")[0]
+    assert null["phash"] is None and null["mean_r"] is None
+    want = sorted(phash64(decode_image(b)) for b in good["bytes"])
+    assert sorted(r["phash"] for rs in by_id.values() for r in rs) == want
+    corrupt = rows.assign(bytes=list(good["bytes"]) + [b"garbage-not-an-image"])
     with pytest.raises(Exception):
-        with_image_features(spark.createDataFrame(rows)).collect()
+        with_image_features(spark.createDataFrame(corrupt)).collect()
 
 
 def test_resize_pipeline(spark):
@@ -114,7 +117,7 @@ def test_resize_pipeline(spark):
 
     pdf = generate_images(n_rows=40, n_entities=5, seed=77)
     df = spark.createDataFrame(pdf)
-    out = with_resized_images(df, out_w=8, out_h=6, fmt="png").toPandas()
+    out = with_resized_images(df, out_w=8, out_h=6).toPandas()
     assert len(out) == 40
     assert set(["image_id", "caption", "event_time"]).issubset(out.columns)
     assert (out["w"] == 8).all() and (out["h"] == 6).all()
@@ -126,5 +129,5 @@ def test_resize_pipeline(spark):
         assert got.shape == (6, 8, 3)
         assert np.array_equal(got, want)
     # deterministic across runs
-    again = with_resized_images(df, out_w=8, out_h=6, fmt="png").toPandas()
+    again = with_resized_images(df, out_w=8, out_h=6).toPandas()
     assert [bytes(b) for b in out["bytes"]] == [bytes(b) for b in again["bytes"]]

@@ -191,6 +191,31 @@ def test_resume_skips_done_partitions(spark, setup, full_run):
     pd.testing.assert_frame_equal(a, b)
 
 
+def test_state_only_commit_keeps_materialize_keys(spark, setup, tmp_path):
+    """A state snapshot is read only while its ``features_key`` matches
+    the feature dirs at or before it, so the feature dirs decide every
+    as-of input: a commit to the state table alone changes no
+    materialize key and recomputes no date."""
+    from feature_store_spark.pipeline.materialize import materialize_keys
+
+    _, _, _, images_t, obs_t = setup
+    out_t = PartitionedTable(str(tmp_path), "out", "obs_date")
+    ckpt = CheckpointManifest(str(tmp_path / "_checkpoint.jsonl"))
+    lin = LineageLog(str(tmp_path / "_lineage.jsonl"))
+    assert materialize(spark, images_t, obs_t, out_t, ckpt, lin)
+    feats_t = PartitionedTable(out_t.path, "_features", "event_date")
+    state_t = PartitionedTable(out_t.path, "_state", "event_date")
+    keys = materialize_keys(obs_t, feats_t, None)
+
+    p = state_t.partitions()[0]
+    old_dirs = state_t.current_snapshot().mapping[p]
+    state_t.write(state_t.read(spark, partitions=[p]),
+                  meta=state_t.partition_info()[p])
+    assert state_t.current_snapshot().mapping[p] != old_dirs
+    assert materialize_keys(obs_t, feats_t, None) == keys
+    assert materialize(spark, images_t, obs_t, out_t, ckpt, lin) == []
+
+
 def test_batched_equals_per_date(spark, setup, full_run):
     """The batched obs-date loop (round-4: N consecutive dates per Spark
     job against state@<D1 ∪ features@[D1..Dn]) must equal per-date

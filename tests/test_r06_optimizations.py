@@ -45,28 +45,92 @@ def test_phash64_batch_bit_identical():
     assert (parts == ref).all()
 
 
-def test_features_batch_nulls_interleaved():
-    """Corrupt/null payloads keep their rows with null features while
-    surrounding rows still hash correctly (index bookkeeping of the
-    batched kernel)."""
+def _kernel_payloads(n, seed):
+    """``n`` encoded random images of mixed dims, png and jpeg."""
+    from feature_store_spark.functions.images import encode_image
+
+    rng = np.random.default_rng(seed)
+    return [
+        encode_image(
+            rng.integers(0, 256, size=(int(rng.integers(5, 40)),
+                                       int(rng.integers(5, 40)), 3),
+                         dtype=np.uint8),
+            ("png", "jpeg")[i % 2],
+        )
+        for i in range(n)
+    ]
+
+
+def _assert_features(out, payloads):
+    """Each row of the kernel's struct output equals the per-image
+    reference (phash64 / decode_stats of decode_image); null payloads
+    give all-null fields."""
     from feature_store_spark.functions.images import (
-        _features_batch,
-        encode_image,
+        IMAGE_FEATURES_SCHEMA,
+        decode_image,
+        decode_stats,
         phash64,
     )
 
-    rng = np.random.default_rng(12)
-    px1 = rng.integers(0, 256, size=(9, 17, 3), dtype=np.uint8)
-    px2 = rng.integers(0, 256, size=(30, 8, 3), dtype=np.uint8)
-    data = pd.Series(
-        [encode_image(px1, "png"), None, b"corrupt", encode_image(px2, "png")]
-    )
-    out = _features_batch(data, tolerant=True)
-    assert out["phash"][0] == phash64(px1)
-    assert out["phash"][3] == phash64(px2)
-    assert pd.isna(out["phash"][1]) and pd.isna(out["phash"][2])
-    assert pd.isna(out["mean_r"][2])
-    assert out["dec_w"][0] == 17 and out["dec_h"][3] == 30
+    assert len(out) == len(payloads)
+    got = out.to_pylist()
+    for row, buf in zip(got, payloads):
+        assert list(row) == IMAGE_FEATURES_SCHEMA.fieldNames()
+        if buf is None:
+            assert all(v is None for v in row.values())
+            continue
+        px = decode_image(buf)
+        assert row["phash"] == phash64(px)
+        assert (row["dec_w"], row["dec_h"]) == (px.shape[1], px.shape[0])
+        assert tuple(row[f] for f in ("mean_r", "mean_g", "mean_b",
+                                      "std_r", "std_g", "std_b")) \
+            == decode_stats(px)
+
+
+def test_features_batch_nulls_interleaved():
+    """Null payloads keep their rows with null features while the
+    surrounding rows still hash correctly (index bookkeeping of the
+    batched kernel), for ``binary`` and ``large_binary`` offsets, whole
+    and sliced (non-zero ``offset``)."""
+    import pyarrow as pa
+
+    from feature_store_spark.functions.images import _features_batch
+
+    imgs = _kernel_payloads(6, seed=12)
+    payloads = [imgs[0], None, None, imgs[1], imgs[2], None, imgs[3],
+                imgs[4], None, imgs[5]]
+    for typ in (pa.binary(), pa.large_binary()):
+        arr = pa.array(payloads, typ)
+        _assert_features(_features_batch(arr), payloads)
+        for lo, hi in ((1, 10), (3, 8), (2, 3)):
+            sliced = arr.slice(lo, hi - lo)
+            assert sliced.offset == lo
+            _assert_features(_features_batch(sliced), payloads[lo:hi])
+
+
+def test_features_batch_all_null_and_empty():
+    import pyarrow as pa
+
+    from feature_store_spark.functions.images import _features_batch
+
+    for typ in (pa.binary(), pa.large_binary()):
+        _assert_features(_features_batch(pa.nulls(4, typ)), [None] * 4)
+        _assert_features(_features_batch(pa.array([None, None], typ)),
+                         [None] * 2)
+        _assert_features(_features_batch(pa.array([], typ)), [])
+
+
+def test_features_batch_corrupt_payload_raises():
+    """Strict decode is the only mode: a corrupt payload anywhere in the
+    batch raises (the Spark task fails) instead of giving nulls."""
+    import pyarrow as pa
+
+    from feature_store_spark.functions.images import _features_batch
+
+    imgs = _kernel_payloads(2, seed=14)
+    for bad in (b"corrupt", b"FSPN\x04\x00\x04\x00not-zlib", b""):
+        with pytest.raises(Exception):
+            _features_batch(pa.array([imgs[0], None, bad, imgs[1]]))
 
 
 # ---------------------------------------------------------------------
